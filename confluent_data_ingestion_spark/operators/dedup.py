@@ -1038,7 +1038,6 @@ def dedup_against_corpus(
     rows_per_band: int = 2,
     max_group_size: int | None = 500,
     index: dict[str, DataFrame] | None = None,
-    new_bands: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental dedup: label each NEW document against an existing
     corpus — the shape a production ingest actually runs (a daily batch
@@ -1076,14 +1075,9 @@ def dedup_against_corpus(
         new_d.join(index["digests"], "d", "left_semi").select(id_col)
     )
 
-    # new_bands: callers holding band rows for (a subset of) the new
-    # batch — e.g. a session artifact covering unmodified re-ingests —
-    # pass them here instead of re-signing; the hot-group cap still runs
-    # over the full new-batch band set below, exactly as the inline path
     new_b = _cap_hot_groups(
-        new_bands if new_bands is not None
-        else _minhash_band_keys(new_docs, id_col, text_col, n, num_hashes,
-                                rows_per_band),
+        _minhash_band_keys(new_docs, id_col, text_col, n, num_hashes,
+                           rows_per_band),
         ["band", "key"],
         max_group_size,
     )

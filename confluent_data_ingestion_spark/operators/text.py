@@ -662,22 +662,6 @@ def bigram_pair_positions(
     )
 
 
-def bigram_pair_tf(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per-document adjacent-pair term frequencies —
-    ``(id_col, w1, w2, tf)`` over raw tokens (no vocabulary mapping).
-    Kept for callers that need the aggregated per-doc table itself; the
-    bigram scorer and PMI work from ``bigram_pair_positions`` directly
-    (their sums are distributive over positions, so the per-doc
-    aggregation's corpus-scale shuffle buys them nothing)."""
-    return bigram_pair_positions(df, text_col, id_col).groupBy(
-        id_col, "w1", "w2"
-    ).agg(F.count(F.lit(1)).alias("tf"))
-
-
 def bigram_logprob_score(
     df: DataFrame,
     text_col: str = "text",

@@ -61,11 +61,101 @@ def test_release_artifact_families_unknown_name_fails_loudly():
         Q.release_artifact_families(["no_such_family"])
 
 
+def test_artifact_switch_eviction_frees_checkpoint_blocks(spark):
+    """A build for a new sf_dir drops the family's entry for the old one
+    AND frees its checkpoint blocks, whatever the value's shape: a bare
+    frame, a tuple or a dict of frames (a scalar is dropped as is).  The
+    assertions track the RDD ids this test pinned, polled because the
+    release is non-blocking (see test_bm25_index_unpersist_releases_blocks
+    for why a global count does not work)."""
+    import time
+
+    def persistent_ids() -> set:
+        return {
+            int(k)
+            for k in spark.sparkContext._jsc.getPersistentRDDs()
+            .keySet().toArray()
+        }
+
+    def pinned(build):
+        before = persistent_ids()
+        value = build()
+        ids = persistent_ids() - before
+        assert ids, "localCheckpoint no longer pins a persistent RDD"
+        return value, ids
+
+    def ckpt(n):
+        return spark.range(n).localCheckpoint()
+
+    def gone(ids) -> bool:
+        deadline = time.monotonic() + 90
+        while ids & persistent_ids() and time.monotonic() < deadline:
+            time.sleep(0.1)
+        return not ids & persistent_ids()
+
+    fam = Q.ARTIFACT_FAMILIES["bpe"]
+    Q.release_artifact_families(["bpe"])
+    try:
+        frame, frame_ids = pinned(lambda: ckpt(10))
+        pair, pair_ids = pinned(lambda: (ckpt(11), ckpt(12)))
+        arts, arts_ids = pinned(lambda: {"a": ckpt(13), "b": ckpt(14)})
+        values = [(frame, frame_ids), (pair, pair_ids), (arts, arts_ids),
+                  (7, set())]
+        for i, (value, ids) in enumerate(values):
+            sf = f"/switch/sf{i}"
+            assert Q.artifact(spark, sf, "bpe", lambda v=value: v) is value
+            # a hit on the same key returns the stored value, no build
+            assert Q.artifact(spark, sf, "bpe", lambda: 1 / 0) is value
+            assert [k[1] for k in fam] == [sf]
+            assert ids <= persistent_ids(), "the stored value was freed"
+            if i:
+                prev_ids = values[i - 1][1]
+                assert gone(prev_ids), (
+                    f"switching to {sf} left the replaced entry's "
+                    "checkpoint blocks pinned"
+                )
+    finally:
+        Q.release_artifact_families(["bpe"])
+
+
+def test_artifact_build_after_session_restart():
+    """A build in a new session drops the stopped session's entries
+    without a release: the stopped context's blocks went with its block
+    manager, and releasing through it raises.  Runs in a child process,
+    since it must stop its session."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    code = textwrap.dedent("""
+        from pyspark.sql import SparkSession
+        from confluent_data_ingestion_spark.caching import (
+            ARTIFACT_FAMILIES, artifact,
+        )
+
+        def session():
+            return (SparkSession.builder.master("local[1]")
+                    .config("spark.ui.enabled", "false").getOrCreate())
+
+        for _ in range(2):
+            s = session()
+            artifact(s, "/sf", "bpe", lambda: s.range(5).localCheckpoint())
+            s.stop()
+        assert len(ARTIFACT_FAMILIES["bpe"]) == 1
+    """)
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True, timeout=600
+    )
+
+
 def test_artifact_registry_covers_every_session_cache():
     """Every module-level artifact cache in the query registry must be
-    reachable through ARTIFACT_FAMILIES — a new cache added without an
-    evictor would silently reopen the bench attribution hole."""
-    registered = {id(c) for c, _evict in Q.ARTIFACT_FAMILIES.values()}
+    one of the session-artifact store's family dicts — a cache kept
+    outside the store would have no eviction and would silently reopen
+    the bench attribution hole."""
+    registered = {id(c) for c in Q.ARTIFACT_FAMILIES.values()}
     for name in dir(Q):
         if name.endswith("_CACHE") and isinstance(getattr(Q, name), dict):
             assert id(getattr(Q, name)) in registered, (
@@ -174,15 +264,16 @@ def test_bitext_corpus_drift_fails_loudly(spark, sf_dir):
     silently hash-mismatch (r15 ADVICE).  Simulated via the memoized
     corpus count the row feeds to the auto-width law."""
     key = (spark.sparkContext.applicationId, sf_dir)
-    old = dict(Q._EMB_COUNT_CACHE)
+    counts = Q.ARTIFACT_FAMILIES["emb_count"]
+    old = dict(counts)
     try:
-        Q._EMB_COUNT_CACHE.clear()
-        Q._EMB_COUNT_CACHE[key] = 500_000  # width-8+ regime
+        counts.clear()
+        counts[key] = 500_000  # width-8+ regime
         with pytest.raises(AssertionError, match="re-pin the oracle"):
             Q.QUERIES["bitext_mutual_margin"](spark, sf_dir)
     finally:
-        Q._EMB_COUNT_CACHE.clear()
-        Q._EMB_COUNT_CACHE.update(old)
+        counts.clear()
+        counts.update(old)
 
 
 def test_bitext_row_memoizes_corpus_count(spark, sf_dir):
@@ -192,7 +283,7 @@ def test_bitext_row_memoizes_corpus_count(spark, sf_dir):
     Q.release_artifact_families(["emb_count"])
     df = Q.QUERIES["bitext_mutual_margin"](spark, sf_dir)
     key = (spark.sparkContext.applicationId, sf_dir)
-    assert Q._EMB_COUNT_CACHE.get(key, 0) > 0
+    assert Q.ARTIFACT_FAMILIES["emb_count"].get(key, 0) > 0
     assert df.columns == ["a_id", "b_id", "cosine", "margin"]
 
 

@@ -110,14 +110,17 @@ def main() -> None:
             best = time.perf_counter() - t0
         return round(best, 3)
 
-    # zorder_rewrite is a one-off write: clear its layout cache before
-    # each run so BOTH runs pay the rewrite (the warm run would otherwise
-    # just re-read the cached layout).  skipscan_events_range then probes
-    # with the cache left POPULATED — it is the steady-state read path.
+    # zorder_rewrite is a one-off write: release its layout artifact
+    # before each run so BOTH runs pay the rewrite (the warm run would
+    # otherwise just re-read the stored layout).  skipscan_events_range
+    # then probes with the artifact left POPULATED — it is the
+    # steady-state read path.
     def _clear_layout_cache():
-        from confluent_data_ingestion_spark import queries as _q
+        from confluent_data_ingestion_spark.queries import (
+            release_artifact_families,
+        )
 
-        _q._SKIPSCAN_CACHE.clear()
+        release_artifact_families(["skipscan"])
 
     pre_hooks = {"zorder_rewrite": _clear_layout_cache}
 
