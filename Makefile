@@ -1,7 +1,8 @@
 # Convenience targets for the verification surface (see USAGE.md and
 # .claude/skills/verify/SKILL.md for the full driver contract).
 
-.PHONY: test correctness correctness-sf01 bench audit plan-fixture smoke verify
+.PHONY: test correctness correctness-sf01 bench audit plan-fixture smoke verify \
+	perfbench-ab
 
 test:
 	python -m pytest tests/ -x -q
@@ -30,5 +31,14 @@ smoke:
 	from confluent_data_ingestion_spark.session import get_spark; \
 	s = get_spark('smoke'); s.sparkContext.setLogLevel('ERROR'); \
 	df = e.entry(s); print('rows:', df.count(), df.schema.simpleString())"
+
+# same-session benchmark A/B: REF (exported with git archive) against the
+# working tree, alternating sides over SEEDS
+REF ?= HEAD
+WORKLOAD ?= stream_upsert
+SEEDS ?= 1 2 3 4 5 6 7 8 9 10
+perfbench-ab:
+	python3 tools/perfbench_ab.py --ref $(REF) --workload $(WORKLOAD) \
+		--seeds $(SEEDS)
 
 verify: correctness smoke bench

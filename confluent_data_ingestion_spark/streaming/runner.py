@@ -7,29 +7,52 @@ Flink plans one job with shared scans (``scripts/sttm_to_flink_v22.py:
 
  - batch:     persist the raw envelope once, write every compiled target
    sequentially from the cached scan, unpersist.
- - streaming: ONE ``foreachBatch`` query; each microbatch is persisted,
-   every stage is compiled against it, XREF targets are upserted into a
-   changelog snapshot store, and FGAC/QUARANTINE stages join against the
-   *post-upsert global snapshot* (stream-static per microbatch — the Spark
-   rendering of Flink's changelog join, reference J6/T3,
-   ``resources/sql/xref-queries.sql:80-99``).
+ - streaming: ONE ``foreachBatch`` query.  Per microbatch:
+
+   1. the microbatch is persisted and every stage is compiled against it;
+   2. each XREF target's rows are appended to its changelog snapshot
+      store (``UpsertSnapshot.upsert``);
+   3. the post-upsert *global* latest rows of the keys that append touched
+      (``UpsertSnapshot.latest_of_batch``, which takes the keys from the
+      store's new log partition, not from the views again) are
+      materialized ONCE with an eager ``localCheckpoint`` — but only when
+      a later stage reads the XREF table;
+   4. the FGAC / QUARANTINE stages join against that checkpoint
+      (stream-static per microbatch — the Spark rendering of Flink's
+      changelog join, reference J6/T3,
+      ``resources/sql/xref-queries.sql:80-99``), and their writes are
+      submitted together on the runner's writer threads (started by the
+      first microbatch, stopped by ``finalize``), each keeping its own
+      commit marker;
+   5. the checkpoints and the persisted microbatch are released.
+
+   The sinks share their upstream sub-plans the way the reference's
+   statement set does: no sink write recomputes the views, the XREF
+   dedup or the ranking.  The XREF appends run before the downstream
+   writes, not beside them: the driver is the bottleneck there, and
+   overlapping them was measured slower.
 
 Quiescence contract (AC-2): after all input is consumed, streaming outputs
 equal the batch pipeline run over the same total input.  Tests assert this.
 
 Scale notes: per microbatch the work is bounded by |batch| for views,
-|batch| log-append for XREF, and |batch| ⨝ snapshot for FGAC (the snapshot
-side is latest-per-key, i.e. bounded by live keys, and is typically
-broadcast-able after dedup).  Nothing here collects to the driver; the
-transaction markers make foreachBatch retries idempotent (PR-3).
+|batch| log-append for XREF, the touched keys' history for the ranking,
+and |touched| ⨝ dim for FGAC/QUARANTINE.  Nothing here collects to the
+driver; the transaction markers make foreachBatch retries idempotent
+(PR-3), per sink.
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor, wait
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
+from ..caching import release_checkpoint
 from ..plans.compiler import PipelineCompiler, xref_dedup_spec
 from ..spec.models import PipelineSpec
 from .upsert import UpsertSnapshot
@@ -64,6 +87,21 @@ class StatementSetRunner:
         # production runners skip it and only audit/registry paths pay
         self.capture_plans = capture_plans
         self.last_batch_plans: dict[str, str] = {}
+        # tables some stage reads: only these XREF targets are materialized
+        # for downstream use each microbatch
+        self._read_tables = {
+            t
+            for rows in spec.tables().values()
+            for r in rows
+            for t in (r.source_table, r.join_table)
+            if t
+        }
+        # the threads the downstream sink writes run on: started by the
+        # first microbatch, reused by the later ones, stopped when the
+        # query ends (finalize).  Fresh threads every microbatch cost a
+        # Py4J connection and a JVM thread each in pinned-thread mode, and
+        # made microbatch times spread wider.
+        self._writers: ThreadPoolExecutor | None = None
         os.makedirs(self.out_dir, exist_ok=True)
 
     def table_path(self, table: str) -> str:
@@ -132,29 +170,31 @@ class StatementSetRunner:
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         batch_df = batch_df.persist()
+        checkpoints: list[DataFrame] = []
         try:
             compiler = PipelineCompiler(
                 spark, self.spec,
                 {self.spec.raw_table: batch_df, **self.static_sources},
                 xref_keep_order_fields=True,
             )
-            from pyspark.sql import functions as F
-
+            writes = []
             for table, rows in self.spec.tables().items():  # stage-ordered
                 stage = rows[0].pipeline_stage
                 df = compiler._builders()[stage](table, rows)
                 if self.capture_plans:
                     try:  # plan capture must never fail the batch
-                        self.last_batch_plans[f"{stage} {table}"] = (
-                            df._jdf.queryExecution().executedPlan().toString()
-                        )
-                    except Exception:  # pragma: no cover
-                        pass
+                        plan = df._jdf.queryExecution().executedPlan().toString()
+                    except Exception as ex:  # pragma: no cover
+                        plan = f"<plan capture unavailable: {ex}>"
+                    self.last_batch_plans[f"{stage} {table}"] = plan
                 if stage == "VIEW":
                     compiler.compiled[table] = df
                 elif stage == "XREF":
                     store = self._xref_store(table, rows)
-                    store.upsert(df, batch_id=f"{table}-{batch_id}")
+                    txn = f"{table}-{batch_id}"
+                    store.upsert(df, batch_id=txn)
+                    if table not in self._read_tables:
+                        continue
                     # Delta-driven changelog propagation (reference J6/T3):
                     # downstream stages see the post-upsert GLOBAL latest
                     # rows, but only for keys touched in this batch — work
@@ -162,26 +202,56 @@ class StatementSetRunner:
                     # quiescence the last batch touching a key computed its
                     # downstream rows from the true global latest, so keyed
                     # downstream upserts converge to the batch-mode result.
-                    pks, _, _, _ = xref_dedup_spec(rows)
-                    target_cols = [r.target_column for r in rows]
-                    touched = df.select(*pks).distinct()
-                    compiler.compiled[table] = (
-                        store.snapshot(spark)
-                        .select(*target_cols)
-                        .join(touched, pks, "left_semi")
-                    )
+                    latest = store.latest_of_batch(
+                        spark, txn, fallback_keys=df
+                    ).select(*[r.target_column for r in rows])
+                    checkpoints.append(latest.localCheckpoint(eager=True))
+                    compiler.compiled[table] = checkpoints[-1]
                 else:  # FGAC / QUARANTINE
                     keyed = self._keyed_store(table, rows)
                     if stage == "FGAC" and keyed is not None:
-                        keyed.upsert(
+                        writes.append(partial(
+                            keyed.upsert,
                             df.withColumn("__seq__", F.lit(batch_id)),
                             batch_id=f"{table}-{batch_id}",
-                        )
+                        ))
                     else:  # reject/append streams
-                        self._append_once(df, table, batch_id)
+                        writes.append(
+                            partial(self._append_once, df, table, batch_id)
+                        )
                     compiler.compiled[table] = df
+            self._run_together(spark, writes)
         finally:
+            for frame in checkpoints:
+                release_checkpoint(frame)
             batch_df.unpersist()
+
+    def _run_together(self, spark: SparkSession, writes: list) -> None:
+        """Run the sink writes as concurrent Spark jobs on the runner's
+        writer threads and wait for all of them; then raise the first
+        failure in submission order.  Each write inherits the calling
+        thread's local properties (the microbatch's
+        ``streaming.sql.batchId``) and job tags; the tags are cleared when
+        it ends, because the thread serves later microbatches too."""
+        if not writes:
+            return
+        if self._writers is None:
+            self._writers = ThreadPoolExecutor(
+                len(writes), thread_name_prefix="sink-writer"
+            )
+        inherit = inheritable_thread_target(spark)
+        futures = [
+            self._writers.submit(inherit(partial(_untagged, spark, write)))
+            for write in writes
+        ]
+        wait(futures)
+        for future in futures:
+            future.result()
+
+    def _stop_writers(self) -> None:
+        if self._writers is not None:
+            self._writers.shutdown()
+            self._writers = None
 
     def run_streaming(self, raw_stream: DataFrame, *, available_now: bool = True):
         """One streaming query fanning out to every sink (T1).  With
@@ -196,13 +266,18 @@ class StatementSetRunner:
             writer = writer.trigger(availableNow=True)
         query = writer.start()
         if available_now:
-            query.awaitTermination()
+            try:
+                query.awaitTermination()
+            finally:
+                self._stop_writers()
             self.finalize()
         return query
 
     def finalize(self) -> dict[str, str]:
         """Materialize final XREF / keyed-FGAC snapshots as plain parquet
-        tables (the quiescence outputs the batch mode writes directly)."""
+        tables (the quiescence outputs the batch mode writes directly), and
+        stop the sink-writer threads."""
+        self._stop_writers()
         paths: dict[str, str] = {}
         for table, rows in self.spec.tables().items():
             stage = rows[0].pipeline_stage
@@ -221,3 +296,10 @@ class StatementSetRunner:
             ).parquet(out)
             paths[table] = out
         return paths
+
+
+def _untagged(spark: SparkSession, write) -> None:
+    try:
+        write()
+    finally:
+        spark.clearTags()

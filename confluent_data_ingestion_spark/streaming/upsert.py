@@ -15,7 +15,16 @@ without the dependency):
    ``DeltaTable.…txnVersion``).
  - ``snapshot()``     reads the log and collapses to latest-per-key with
    the same ``latest_by_key`` operator the batch path uses, so batch and
-   streaming agree at quiescence (AC-2 semantics).
+   streaming agree at quiescence (AC-2 semantics).  The store is the log's
+   only writer, so it keeps the log's merged schema in memory: the first
+   read of a store instance merges every footer, later reads pass the
+   known schema and plan without touching a footer, and an append that
+   brings a new column or type (or a compaction, or the v1 migration)
+   drops the cached schema so the next read merges again.
+ - ``latest_of_batch(batch_id)``  the current rows of only the keys one
+   append wrote: the log is semi-joined on that append's ``__seq``
+   partition keys before ranking (exact, since the ranking window is
+   partitioned by the keys) — what a microbatch propagates downstream.
  - ``compact()``      rewrites the log as its snapshot, bounding read
    amplification (changelog compaction).
  - ``snapshot_as_of(seq)``  time travel: every append lands in its own
@@ -51,6 +60,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..operators.xref import latest_by_key
 
@@ -82,8 +92,11 @@ class UpsertSnapshot:
         self.delta_dir = f"{self.path}/delta"
         self.txn_dir = f"{self.path}/_txn"
         # single-writer contract (foreachBatch): the v1->v2 format check
-        # runs once per store instance, not once per append
+        # runs once per store instance, not once per append, and the log's
+        # merged schema is known without re-reading footers (None: merge
+        # on the next read)
         self._log_format_checked = False
+        self._log_schema: StructType | None = None
         os.makedirs(self.txn_dir, exist_ok=True)
 
     def _resolve_backend(self, spark: SparkSession) -> str:
@@ -133,6 +146,10 @@ class UpsertSnapshot:
                 .parquet(self.log_dir)
             )
             self._bump_seq(seq)
+            if self._log_schema is not None:
+                known = {(f.name, f.dataType) for f in self._log_schema}
+                if any((f.name, f.dataType) not in known for f in batch_df.schema):
+                    self._log_schema = None
         if batch_id is not None:
             with open(self._marker(batch_id), "w") as f:
                 # delta markers carry no sequence — write a sentinel, never
@@ -185,6 +202,7 @@ class UpsertSnapshot:
         os.makedirs(part_dst, exist_ok=True)
         for p in roots:
             os.rename(p, os.path.join(part_dst, os.path.basename(p)))
+        self._log_schema = None
         success = os.path.join(self.log_dir, "_SUCCESS")
         if os.path.isfile(success):
             os.remove(success)
@@ -350,20 +368,26 @@ class UpsertSnapshot:
         partition column (parquet-log backend only — the delta backend
         materializes current rows and keeps history in the Delta log).
 
-        Reads with ``mergeSchema`` so columns ADDED by later appends
-        survive (rows that predate a column read it as NULL — additive
-        schema evolution, the same contract Delta's mergeSchema write
-        option gives).  Without it Spark samples one footer and silently
-        DROPS the new columns from every snapshot.  The footer-merge cost
-        is per-file at planning time; ``compact()`` collapses old files,
-        which also re-homogenizes the schema."""
+        Reads with the merged schema of every file, so columns ADDED by
+        later appends survive (rows that predate a column read it as NULL
+        — additive schema evolution, the same contract Delta's mergeSchema
+        write option gives).  Without it Spark samples one footer and
+        silently DROPS the new columns from every snapshot.  Merging reads
+        every footer in a Spark job, so it runs once per store instance;
+        later reads pass the cached schema, which ``upsert`` drops when an
+        append brings a field or type it lacks, as do ``compact()`` and
+        the v1 migration."""
         if self._resolve_backend(spark) == "delta":
             raise RuntimeError(
                 "log() is parquet-log-only; the delta backend's history "
                 "lives in the Delta transaction log (DESCRIBE HISTORY)"
             )
         self._ensure_log_format(spark)
-        return spark.read.option("mergeSchema", "true").parquet(self.log_dir)
+        if self._log_schema is None:
+            log = spark.read.option("mergeSchema", "true").parquet(self.log_dir)
+            self._log_schema = log.schema
+            return log
+        return spark.read.schema(self._log_schema).parquet(self.log_dir)
 
     def snapshot(self, spark: SparkSession) -> DataFrame:
         """The upsert table's current contents: latest-per-key view of the
@@ -374,6 +398,35 @@ class UpsertSnapshot:
                 self.delta_dir
             )
         return self._rank(self.log(spark))
+
+    def latest_of_batch(
+        self,
+        spark: SparkSession,
+        batch_id,
+        fallback_keys: DataFrame | None = None,
+    ) -> DataFrame:
+        """The current rows of the keys that committed batch ``batch_id``
+        appended: the log semi-joined on the keys of that append's
+        ``__seq`` partition, then ranked.  Equal to ``snapshot()``
+        restricted to those keys, because the ranking window is
+        partitioned by the keys, but the ranking only sees their history.
+        Keys whose rows were all deletes come back absent, as in
+        ``snapshot()``.
+
+        A marker that records no append sequence (a batch committed before
+        the ``__seq`` format) takes its keys from ``fallback_keys`` (any
+        frame holding the key columns); without one it raises, as
+        :meth:`seq_of_batch` does.  Parquet-log only."""
+        log = self.log(spark)
+        try:
+            touched = log.filter(F.col("__seq") == self.seq_of_batch(batch_id))
+        except RuntimeError:
+            if fallback_keys is None:
+                raise
+            touched = fallback_keys
+        return self._rank(
+            log.join(touched.select(*self.keys), self.keys, "left_semi")
+        )
 
     def snapshot_as_of(self, spark: SparkSession, seq: int) -> DataFrame:
         """Time travel: the table as it stood after append ``seq`` — the
@@ -438,4 +491,5 @@ class UpsertSnapshot:
         old = f"{self.path}/log-old-{uuid.uuid4().hex[:8]}"
         os.rename(self.log_dir, old)
         os.rename(tmp, self.log_dir)
+        self._log_schema = None
         shutil.rmtree(old)

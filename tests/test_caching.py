@@ -1,11 +1,12 @@
 """Regression tests for caching.release_checkpoint: the JVM-internal
-release path (``_jdf.queryExecution().analyzed().rdd().unpersist``) is
-wrapped in a blanket except — a Spark upgrade that changes the analyzed
-plan shape would silently turn every eviction-time release back into
-the leak it fixes.  These tests exercise the call DIRECTLY against the
-block manager's persistent-RDD registry so a silent no-op fails CI
-instead of leaking (BM25 eviction is pinned elsewhere; PQ / simhash /
-skip-scan / BPE evictions all ride this same call)."""
+release path (``_jdf.queryExecution().analyzed().rdd().unpersist``) acts
+only when the analyzed plan is a ``LogicalRDD``, so a Spark upgrade that
+changed the plan shape of a checkpointed frame would silently turn every
+release back into the leak it fixes.  These tests exercise the call
+DIRECTLY against the block manager's persistent-RDD registry so a silent
+no-op fails CI instead of leaking (BM25 eviction is pinned elsewhere;
+every shared-artifact eviction and the streaming runner's per-microbatch
+checkpoints ride this same call)."""
 
 from __future__ import annotations
 

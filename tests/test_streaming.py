@@ -4,6 +4,7 @@ over the same total input, AC-2)."""
 
 import json
 import os
+import threading
 
 import pytest
 from pyspark.sql import Row
@@ -128,11 +129,17 @@ def test_watermark_dedup_stream(spark, tmp_path):
 # ---------------------------------------------------------------------------
 # Statement-set runner: streaming == batch at quiescence
 # ---------------------------------------------------------------------------
-def _pipeline_spec():
+def _pipeline_spec(*, soft_delete=False, downstream=True):
+    """VIEW -> XREF (latest by seq) -> FGAC / QUARANTINE.  ``soft_delete``
+    adds an ``op`` column whose value D flags a delete event; without
+    ``downstream`` the spec stops at the XREF table."""
     def R(**kw):
         return kw
 
-    return load_spec([
+    xref_delete = (
+        dict(DeleteFlagField="op", DeleteFlagValues="D") if soft_delete else {}
+    )
+    rows = [
         R(PipelineStage="VIEW", TargetTable="V_ACCT", TargetColumn="acct_id",
           TargetDataType="BIGINT", IsTargetPK="Y", FieldSelector="acct_id",
           FilterPredicate="JSON_VALUE(CAST(val AS STRING), '$.tbl') = 'acct'"),
@@ -140,11 +147,25 @@ def _pipeline_spec():
           TargetDataType="BIGINT", FieldSelector="seq"),
         R(PipelineStage="VIEW", TargetTable="V_ACCT", TargetColumn="status",
           TargetDataType="STRING", FieldSelector="status"),
+    ]
+    if soft_delete:
+        rows.append(R(PipelineStage="VIEW", TargetTable="V_ACCT",
+                      TargetColumn="op", TargetDataType="STRING",
+                      FieldSelector="op"))
+    rows += [
         R(PipelineStage="XREF", TargetTable="XREF_ACCT", TargetColumn="acct_id",
           TargetDataType="BIGINT", IsTargetPK="Y", SourceTable="V_ACCT",
-          FieldSelector="acct_id", OrderByFields="seq"),
+          FieldSelector="acct_id", OrderByFields="seq", **xref_delete),
         R(PipelineStage="XREF", TargetTable="XREF_ACCT", TargetColumn="status",
           SourceTable="V_ACCT", FieldSelector="status"),
+    ]
+    if soft_delete:
+        rows.append(R(PipelineStage="XREF", TargetTable="XREF_ACCT",
+                      TargetColumn="op", SourceTable="V_ACCT",
+                      FieldSelector="op"))
+    if not downstream:
+        return load_spec(rows)
+    return load_spec(rows + [
         R(PipelineStage="FGAC", TargetTable="FGAC_ACCT", TargetColumn="acct_id",
           TargetDataType="BIGINT", IsTargetPK="Y", SourceTable="XREF_ACCT",
           FieldSelector="s.acct_id", JoinTable="dim", JoinAlias="d",
@@ -180,38 +201,45 @@ def _write_envelope_files(src_dir, n_files=3, accts=7, updates=3):
             f.writelines(json.dumps(m) + "\n" for m in msgs[i * per:(i + 1) * per])
 
 
+def _sink_rows(spark, path, columns):
+    return sorted(map(tuple, spark.read.parquet(path).select(*columns).collect()))
+
+
+def _assert_streaming_matches_batch(spark, tmp_path, spec, src, dim):
+    """Run ``spec`` over the files under ``src`` in batch mode and as a
+    one-file-per-microbatch stream; every sink must hold the same rows
+    (the append-only quarantine stream compared as a set).  Returns the
+    streaming sinks' rows by table."""
+    batch_paths = StatementSetRunner(
+        spark, spec, {"dim": dim}, str(tmp_path / "out_batch")
+    ).run_batch(spark.read.text(src).select(F.col("value").alias("val")))
+    stream_runner = StatementSetRunner(
+        spark, spec, {"dim": dim}, str(tmp_path / "out_stream"))
+    stream_runner.run_streaming(
+        file_envelope_stream(spark, src, max_files_per_trigger=1))
+    got = {}
+    for table, path in batch_paths.items():
+        cols = spark.read.parquet(path).columns
+        b = _sink_rows(spark, path, cols)
+        s = _sink_rows(spark, stream_runner.table_path(table), cols)
+        if spec.stage_of(table) == "QUARANTINE":
+            b, s = sorted(set(b)), sorted(set(s))
+        assert s == b, f"{table}: streaming != batch at quiescence"
+        got[table] = s
+    return got
+
+
 def test_statement_set_streaming_matches_batch(spark, tmp_path):
     src = str(tmp_path / "msgs")
     _write_envelope_files(src)
     dim = spark.createDataFrame(
         [Row(id=i, segment=f"seg{i % 2}") for i in range(10)]
     )
-    spec = _pipeline_spec()
-
-    batch_runner = StatementSetRunner(
-        spark, spec, {"dim": dim}, str(tmp_path / "out_batch"))
-    raw = spark.read.text(src).select(F.col("value").alias("val"))
-    batch_paths = batch_runner.run_batch(raw)
-
-    stream_runner = StatementSetRunner(
-        spark, spec, {"dim": dim}, str(tmp_path / "out_stream"))
-    stream = file_envelope_stream(spark, src, max_files_per_trigger=1)
-    stream_runner.run_streaming(stream)
-
-    for table in ("XREF_ACCT", "FGAC_ACCT", "Q_ACCT"):
-        b = sorted(map(tuple, spark.read.parquet(batch_paths[table])
-                       .select(spark.read.parquet(batch_paths[table]).columns).collect()))
-        s_df = spark.read.parquet(stream_runner.table_path(table))
-        s = sorted(map(tuple, s_df.select(*spark.read.parquet(batch_paths[table]).columns)
-                       .collect()))
-        if table == "Q_ACCT":
-            # reject stream is append-only: dedup for comparison
-            s = sorted(set(s))
-            b = sorted(set(b))
-        assert s == b, f"{table}: streaming != batch at quiescence"
+    got = _assert_streaming_matches_batch(
+        spark, tmp_path, _pipeline_spec(), src, dim)
+    assert set(got) == {"XREF_ACCT", "FGAC_ACCT", "Q_ACCT"}
     # sanity: quarantine caught exactly the orphan accounts
-    q = spark.read.parquet(stream_runner.table_path("Q_ACCT"))
-    assert set(r["acct_id"] for r in q.collect()) == {105, 106}
+    assert got["Q_ACCT"] == [(105,), (106,)]
 
 
 def test_statement_set_restart_is_noop(spark, tmp_path):
@@ -234,6 +262,108 @@ def test_statement_set_restart_is_noop(spark, tmp_path):
     log_count2 = runner2._xref_store("XREF_ACCT", spec.tables()["XREF_ACCT"]).log(spark).count()
     assert before == after
     assert log_count == log_count2  # nothing re-appended
+
+
+def _write_files(src_dir, files):
+    os.makedirs(src_dir)
+    for i, msgs in enumerate(files):
+        with open(f"{src_dir}/f{i}.ndjson", "w") as f:
+            f.writelines(json.dumps({"tbl": "acct", **m}) + "\n" for m in msgs)
+
+
+def test_statement_set_streaming_matches_batch_on_change_edge_cases(
+    spark, tmp_path
+):
+    """Per-microbatch propagation must not lose or revive rows when a
+    file holds an event OLDER than a key's current version, events for a
+    key that only ever gets deletes, or a delete of a key's newest
+    version (the previous version comes back, in a later file or in the
+    same one)."""
+    def ev(aid, seq, status, op="U"):
+        return {"acct_id": aid, "seq": seq, "status": status, "op": op}
+
+    src = str(tmp_path / "msgs")
+    _write_files(src, [
+        [ev(1, 10, "a1-v1"), ev(1, 12, "a1-v2"), ev(2, 11, "a2-v1"),
+         ev(3, 14, "a3-v1"), ev(6, 15, "a6-v1"), ev(105, 13, "q-v1")],
+        [ev(1, 5, "a1-stale"), ev(4, 20, "a4-del", "D"),
+         ev(104, 21, "q4-del", "D"), ev(2, 22, "a2-v2"),
+         ev(3, 23, "a3-del", "D")],
+        [ev(2, 30, "a2-del", "D"), ev(4, 31, "a4-del2", "D"),
+         ev(105, 32, "q-del", "D"), ev(1, 6, "a1-stale2"),
+         ev(6, 33, "a6-v2"), ev(6, 34, "a6-del", "D")],
+    ])
+    dim = spark.createDataFrame(
+        [Row(id=i, segment=f"seg{i % 2}") for i in range(10)]
+    )
+    got = _assert_streaming_matches_batch(
+        spark, tmp_path, _pipeline_spec(soft_delete=True), src, dim)
+    assert got["XREF_ACCT"] == [
+        (1, "a1-v2", "U"), (2, "a2-v2", "U"), (3, "a3-v1", "U"),
+        (6, "a6-v2", "U"), (105, "q-v1", "U"),
+    ]
+    assert got["FGAC_ACCT"] == [
+        (1, "a1-v2", "seg1"), (2, "a2-v2", "seg0"), (3, "a3-v1", "seg1"),
+        (6, "a6-v2", "seg0"),
+    ]
+    assert got["Q_ACCT"] == [(105,)]
+
+
+def test_statement_set_xref_only_spec_matches_batch(spark, tmp_path):
+    """A spec whose XREF table no later stage reads: no downstream write
+    and no materialized post-upsert rows, same quiescent XREF."""
+    src = str(tmp_path / "msgs")
+    _write_envelope_files(src)
+    dim = spark.createDataFrame([Row(id=0, segment="s")])
+    got = _assert_streaming_matches_batch(
+        spark, tmp_path, _pipeline_spec(downstream=False), src, dim)
+    assert set(got) == {"XREF_ACCT"}
+    assert len(got["XREF_ACCT"]) == 7
+
+
+def test_statement_set_streaming_releases_its_blocks(spark, tmp_path):
+    """Every microbatch persists its input and checkpoints the post-upsert
+    XREF rows; a missed release would leak blocks once per microbatch."""
+    jsc = spark.sparkContext._jsc.sc()
+    src = str(tmp_path / "msgs")
+    _write_envelope_files(src, n_files=4)
+    dim = spark.createDataFrame([Row(id=i, segment="s") for i in range(10)])
+    base = jsc.getPersistentRDDs().size()
+    runner = StatementSetRunner(
+        spark, _pipeline_spec(), {"dim": dim}, str(tmp_path / "out"))
+    runner.run_streaming(
+        file_envelope_stream(spark, src, max_files_per_trigger=1))
+    assert spark.read.parquet(runner.table_path("FGAC_ACCT")).count() == 5
+    assert jsc.getPersistentRDDs().size() == base
+
+
+def test_statement_set_sink_writes_reuse_the_runner_threads(spark, tmp_path):
+    """Every microbatch's downstream writes run on the runner's writer
+    threads, not on threads started per microbatch, and the threads stop
+    when the query ends."""
+    src = str(tmp_path / "msgs")
+    _write_envelope_files(src, n_files=4)
+    dim = spark.createDataFrame([Row(id=i, segment="s") for i in range(10)])
+    runner = StatementSetRunner(
+        spark, _pipeline_spec(), {"dim": dim}, str(tmp_path / "out"))
+    threads, batches = set(), set()
+    append_once = runner._append_once
+
+    def _recording(df, table, batch_id):
+        threads.add(threading.current_thread())
+        batches.add(batch_id)
+        append_once(df, table, batch_id)
+
+    runner._append_once = _recording
+    runner.run_streaming(
+        file_envelope_stream(spark, src, max_files_per_trigger=1))
+    assert batches == {0, 1, 2, 3}
+    # two downstream sinks: the pool holds two threads
+    assert 1 <= len(threads) <= 2
+    assert all(t.name.startswith("sink-writer") for t in threads)
+    assert not any(t.is_alive() for t in threads)
+    assert sorted(_sink_rows(spark, runner.table_path("Q_ACCT"), ["acct_id"])) \
+        == [(105,)] * 3 + [(106,)] * 3
 
 
 def test_parse_state_ttl():
@@ -1113,6 +1243,64 @@ def test_upsert_log_additive_schema_evolution(spark, tmp_path):
     ]
     for pf in part_files:
         assert "extra" in spark.read.parquet(pf).columns
+
+
+def test_snapshot_sees_columns_added_after_a_read(spark, tmp_path):
+    """The store caches the log's merged schema at its first read; an
+    append that adds a column must drop that cache, before and after a
+    compaction (a stale schema would silently drop the new column)."""
+    store = UpsertSnapshot(str(tmp_path / "evo_cached"), ["k"], ["seq"])
+
+    def snap():
+        return sorted(map(tuple, store.snapshot(spark).collect()))
+
+    store.upsert(spark.createDataFrame([Row(k=1, seq=1, v="a")]))
+    assert snap() == [(1, 1, "a")]  # caches the schema
+    store.upsert(spark.createDataFrame([Row(k=2, seq=1, v="b", extra="X")]))
+    assert store.snapshot(spark).columns == ["k", "seq", "v", "extra"]
+    assert snap() == [(1, 1, "a", None), (2, 1, "b", "X")]
+
+    store.compact(spark)
+    assert snap() == [(1, 1, "a", None), (2, 1, "b", "X")]  # caches again
+    store.upsert(spark.createDataFrame(
+        [Row(k=1, seq=2, v="a2", extra="Y", more=7)]))
+    assert snap() == [(1, 2, "a2", "Y", 7), (2, 1, "b", "X", None)]
+    # an append within the cached schema keeps the cache, and is read
+    store.upsert(spark.createDataFrame(
+        [Row(k=3, seq=1, v="c", extra="Z", more=8)]))
+    assert snap()[-1] == (3, 1, "c", "Z", 8)
+
+
+def test_latest_of_batch_reads_the_keys_one_append_wrote(spark, tmp_path):
+    store = UpsertSnapshot(
+        str(tmp_path / "lob"), ["k"], ["seq"],
+        delete_flag_field="op", delete_flag_values=("D",),
+    )
+    store.upsert(spark.createDataFrame([
+        Row(k=1, seq=1, v="a", op="U"), Row(k=2, seq=1, v="b", op="U"),
+        Row(k=3, seq=1, v="c", op="U"),
+    ]), batch_id="b0")
+    store.upsert(spark.createDataFrame([
+        Row(k=1, seq=0, v="stale", op="U"), Row(k=2, seq=2, v="b-del", op="D"),
+        Row(k=4, seq=2, v="d-del", op="D"),
+    ]), batch_id="b1")
+
+    def rows(df):
+        return sorted((r["k"], r["v"]) for r in df.collect())
+
+    # touched keys 1, 2, 4: global latest for 1 and 2, nothing for the
+    # delete-only key 4; key 3 (untouched) is not read back
+    assert rows(store.latest_of_batch(spark, "b1")) == [(1, "a"), (2, "b")]
+    assert rows(store.latest_of_batch(spark, "b0")) == [
+        (1, "a"), (2, "b"), (3, "c")]
+    # a marker without a sequence (pre-__seq format) needs the batch's keys
+    with open(store._marker("legacy"), "w") as f:
+        f.write("legacy")
+    with pytest.raises(RuntimeError, match="no append sequence"):
+        store.latest_of_batch(spark, "legacy")
+    keys = spark.createDataFrame([Row(k=3, other="x")])
+    assert rows(store.latest_of_batch(spark, "legacy", fallback_keys=keys)) == [
+        (3, "c")]
 
 
 def test_v1_migration_is_read_triggered_too(spark, tmp_path):
