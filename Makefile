@@ -2,7 +2,7 @@
 # .claude/skills/verify/SKILL.md for the full driver contract).
 
 .PHONY: test correctness correctness-sf01 bench audit plan-fixture smoke verify \
-	perfbench-ab
+	perfbench-ab strict-gate
 
 test:
 	python -m pytest tests/ -x -q
@@ -40,5 +40,17 @@ SEEDS ?= 1 2 3 4 5 6 7 8 9 10
 perfbench-ab:
 	python3 tools/perfbench_ab.py --ref $(REF) --workload $(WORKLOAD) \
 		--seeds $(SEEDS)
+
+# driver-faithful strict gate over the three test scale factors in turn,
+# stopping at the first one with a non-OK row (ONLY=<row>,<row>,...
+# restricts it to those registry rows)
+TESTDATA ?= /root/testdata
+ONLY ?=
+strict-gate:
+	@for sf in sf0.001 sf0.01 sf0.1; do \
+		echo "== strict gate $$sf"; \
+		python tools/strict_gate.py $(TESTDATA)/$$sf \
+			$(if $(ONLY),--only $(ONLY)) || exit 1; \
+	done
 
 verify: correctness smoke bench

@@ -198,7 +198,6 @@ def dawid_skene(
     label_col: str = "label",
     iterations: int = 2,
     smoothing: float = 0.01,
-    pattern_collapse: bool = False,
 ) -> DataFrame:
     """Dawid-Skene label resolution: EM over per-rater confusion
     matrices, so a reliable annotator's vote outweighs a noisy one's —
@@ -240,25 +239,6 @@ def dawid_skene(
     key.  ``iterations`` is a fixed small constant (2-3 converges in
     practice), so the whole resolver is O(iterations) shuffles of
     votes x classes.
-
-    ``pattern_collapse=True`` exploits a structural fact: every EM
-    quantity attached to an item is a function of the item's vote
-    PATTERN alone — the sorted multiset of (rater, label) votes.  Two
-    items with the same pattern get bit-identical posteriors in every
-    round (T0 is a per-pattern expression; the E-step sums the
-    pattern's own logpi cells; the softmax is per item), and the
-    corpus-level M-step sums decompose exactly over patterns:
-    sum_items(t) == sum_patterns(count * t) in bigint micro-units —
-    integer multiplication, no rounding anywhere.  So the whole EM
-    runs over the distinct-pattern table (weighted by pattern count)
-    and the per-item answer is a broadcast join back.  The corpus is
-    then touched exactly twice (one groupBy(item) shuffle to build
-    patterns, one join to emit results) instead of per round.  Safe
-    whenever the pattern space is small — bounded by
-    (classes + 1)^raters for a fixed rater panel; with a large rotating
-    rater pool the pattern key includes rater identities and the
-    collapse buys nothing (it still returns the identical result, but
-    the "tiny" frames are items-sized), so it stays opt-in.
     """
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
@@ -291,21 +271,6 @@ def dawid_skene(
         F.col(rater_col).alias("r"),
         F.col(label_col).alias("l"),
     ).filter(F.col("l").isNotNull())
-    if pattern_collapse:
-        from ..caching import track
-
-        # ONE corpus shuffle: groupBy(item) folds each item's votes into
-        # a deterministic pattern key (collect_list order is not
-        # deterministic; sort_array makes it one — struct comparison is
-        # field-lexicographic).
-        pat = track(
-            v0.groupBy("i").agg(
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("r"), F.col("l")))
-                ).alias("__p__")
-            )
-        )
-        return _dawid_skene_patterns(pat, item_col, label_col, iterations, a)
     v = track(v0.repartition("i"))
     classes = v.select(F.col("l").alias("j")).distinct()
     n_classes = classes.count()  # label-set sized: metadata
@@ -445,33 +410,29 @@ def dawid_skene_wide(
     iterations: int = 2,
     smoothing: float = 0.01,
 ) -> DataFrame:
-    """``dawid_skene(pattern_collapse=True)`` for votes that arrive WIDE
-    (one row per item, one label column per rater, NULL = no vote) — the
-    natural shape of a fixed annotator panel.  The vote pattern is then a
-    pure per-row projection (build the (rater, label) struct array from
-    the columns, drop NULL votes, sort), so the corpus is never shuffled
-    at all: the melt + groupBy(item) a long-form caller pays to
-    reconstruct exactly this row is skipped.  Output and arithmetic are
-    identical to ``dawid_skene`` over the melted long form (the rater
-    name is the column name).
+    """``dawid_skene`` for votes that arrive WIDE (one row per item, one
+    label column per rater, NULL = no vote) — the natural shape of a
+    fixed annotator panel.  The vote pattern is then a pure per-row
+    projection (build the (rater, label) struct array from the columns,
+    drop NULL votes, sort), so no melt or groupBy(item) is needed to
+    reconstruct it.  Output and arithmetic are identical to
+    ``dawid_skene`` over the melted long form (the rater name is the
+    column name).
 
-    When the label set is small (``<= max_vector_classes``) the EM
-    additionally vectorizes: the per-pattern posterior becomes ONE
-    ``array<bigint>`` column, the per-round M-step is ONE global
-    aggregation producing the (raters x classes x classes) confusion
-    tensor as a single row, and the E-step is a pure projection over
-    that row broadcast back — no keyed join, window, or per-matrix-cell
-    frame anywhere.  The whole resolver is then two corpus scans (label
-    inventory + final output) plus O(iterations) metadata-sized jobs,
-    at ANY corpus size.  Above the bound (expression count grows as
-    raters x classes^2) it falls back to the frame-based pattern EM."""
+    Every EM quantity attached to an item is a function of its vote
+    pattern alone, and the M-step sums decompose exactly over patterns
+    (sum over items of t == sum over patterns of count * t, in bigint
+    micro-units).  So while the distinct-pattern table is within
+    ``_DRIVER_EM_MAX_PATTERNS`` — for a fixed panel it is at most
+    (classes+1)^raters — the EM runs driver-side over it
+    (``_dawid_skene_driver``) and the answer broadcast-joins back onto
+    the corpus.  Over the bound the pattern map is exploded back into
+    long-form votes and the distributed frame EM ``dawid_skene`` runs."""
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
-    # deliberately NOT persisted: the pattern map is a scan-level
-    # projection, and caching it would hide its SinglePartition-friendly
-    # lineage behind an InMemoryRelation whose partitioning AQE reports
-    # as unknown — re-reading the scan is cheaper than the exchanges
-    # that reappear downstream (measured: see OPTIMIZATION_r17.md)
+    # not persisted: the pattern map is a scan-level projection, read
+    # once by the probe and once by the final join (or by the long-form
+    # EM, which persists its own vote frame)
     pat = df.select(
         F.col(item_col).alias("i"),
         F.sort_array(
@@ -484,49 +445,36 @@ def dawid_skene_wide(
             )
         ).alias("__p__"),
     ).filter(F.size("__p__") > 0)
-    from ..caching import track
-
-    max_vector_classes = 64
     # distinct-pattern probe: ONE corpus aggregation, fetched bounded
     # (take(N+1) — the repo's bloom/skip-scan collect discipline: a
     # bounded reduction, never row data).  For a fixed panel the pattern
     # space is <= (classes+1)^raters, so almost every real corpus lands
     # under the bound and the whole EM state fits on the driver.
-    pats_plan = pat.groupBy("__p__").agg(F.count(F.lit(1)).alias("__w__"))
-    head = pats_plan.take(_DRIVER_EM_MAX_PATTERNS + 1)
+    head = pat.groupBy("__p__").agg(F.count(F.lit(1)).alias("__w__")).take(
+        _DRIVER_EM_MAX_PATTERNS + 1
+    )
     if len(head) <= _DRIVER_EM_MAX_PATTERNS:
         # metadata-sized EM: run the fixed-point loop driver-side (same
         # integers, same roundings — see _dawid_skene_driver) and
         # broadcast the pattern->answer table back onto the corpus.
         # Two corpus passes total (the probe aggregation + the final
-        # join), ZERO per-round Spark jobs or giant codegen trees.
+        # join), ZERO per-round Spark jobs.
         classes = sorted({v["l"] for row in head for v in row["__p__"]})
         _check_class_bound(len(classes))
         return _dawid_skene_driver(
             pat, head, item_col, "label", iterations, float(smoothing),
             classes,
         )
-    # pattern table too large for the driver: persist it (its only
-    # downstream consumers are global aggregations and 1-row cross
-    # joins, so the cache's partitioning opacity costs nothing) and run
-    # the distributed EM.  The label inventory job also materializes
-    # the cache.
-    pats = track(pats_plan)
-    classes = sorted(
-        r["l"]
-        for r in pats.select(
-            F.explode("__p__").alias("__v__")
-        ).select(F.col("__v__.l").alias("l")).distinct().collect()
+    # pattern table too large for the driver: the long-form frame EM
+    # over the pattern map's own votes (same integers, distributed)
+    votes = pat.select("i", F.explode("__p__").alias("__v__")).select(
+        "i", F.col("__v__.r").alias("r"), F.col("__v__.l").alias("l")
     )
-    _check_class_bound(len(classes))
-    if len(classes) > max_vector_classes or len(rater_cols) > 8:
-        return _dawid_skene_patterns(
-            pat, item_col, "label", iterations, float(smoothing),
-            n_classes=len(classes), pats=pats,
-        )
-    return _dawid_skene_vectorized(
-        pat, pats, item_col, "label", iterations, float(smoothing),
-        rater_cols, classes,
+    return dawid_skene(votes, "i", "r", "l", iterations, smoothing).select(
+        F.col("i").alias(item_col),
+        F.col("l").alias("label"),
+        "confidence",
+        "n_votes",
     )
 
 
@@ -551,14 +499,12 @@ def _dawid_skene_driver(
     table (see ``dawid_skene_wide``): when the pattern space is
     metadata-sized, every EM quantity is a function of at most
     patterns x classes bigint cells, and the round-trip of launching
-    O(iterations) Spark jobs (plus planning/codegen of the vectorized
-    path's raters x classes^2 expression trees) costs orders of
-    magnitude more than the arithmetic itself.  So the loop runs here,
-    in exact Python integers, and only the pattern->answer table (the
-    same rows ``_dawid_skene_vectorized`` would broadcast) goes back to
-    the cluster for the final corpus join.
+    O(iterations) Spark jobs costs orders of magnitude more than the
+    arithmetic itself.  So the loop runs here, in exact Python
+    integers, and only the pattern->answer table goes back to the
+    cluster for the final corpus join.
 
-    Bit-identity with the distributed paths, step by step:
+    Bit-identity with the distributed frame EM, step by step:
 
     - every cross-row SUM is an exact bigint in micro/pico units —
       Python ints ARE arbitrary-precision, so the sums are the same
@@ -675,385 +621,6 @@ def _dawid_skene_driver(
             F.col("i").alias(item_col),
             F.col("__lbl__").alias(label_col),
             F.col("__conf__").alias("confidence"),
-            F.size("__p__").cast("long").alias("n_votes"),
-        )
-    )
-
-
-def _dawid_skene_vectorized(
-    pat: DataFrame,
-    pats: DataFrame,
-    item_col: str,
-    label_col: str,
-    iterations: int,
-    a: float,
-    rater_cols: list[str],
-    classes: list,
-) -> DataFrame:
-    """Array-vector Dawid-Skene EM over the distinct-pattern table (see
-    ``dawid_skene_wide``): with the rater panel known statically and the
-    label set collected as literals, the per-pattern posterior is ONE
-    ``array<bigint>`` column and each EM round is
-
-    - ONE global aggregation over patterns producing the class-prior
-      masses and the raters x classes x classes confusion tensor as a
-      single row (every cell an exact bigint sum — the same integers the
-      frame-based M-step computes, grouped differently), and
-    - ONE projection of that row (broadcast cross join) back onto the
-      pattern table for the E-step/softmax — per-cell expressions
-      identical to the frame-based path, so every intermediate is
-      bit-identical.
-
-    No keyed join, window, or shuffle anywhere in the loop: the resolver
-    is O(iterations) metadata-sized jobs plus the corpus aggregation and
-    the final broadcast join, at any corpus size.
-    """
-    from ..caching import track
-
-    L = len(classes)
-    aL = a * L
-
-    def q(s):  # SQL string literal (backslash is an escape char in
-        # Spark SQL literals unless escapedStringLiterals is set —
-        # double it too, or a label containing one parses wrong)
-        return "'" + str(s).replace("\\", "\\\\").replace("'", "''") + "'"
-
-    # expression-STRING construction throughout: building these trees
-    # with Column operators costs thousands of py4j round-trips (~10 s
-    # of pure driver time measured); one F.expr per finished string is
-    # ~100 calls.  Float literals carry the D suffix so they parse as
-    # the identical IEEE double the frame-based path gets from F.lit.
-    aD, aLD = repr(a) + "D", repr(aL) + "D"
-
-    def m6(x, scale="decimal(7,6)"):
-        return f"cast((cast(round({x}, 6) as {scale}) * 1000000) as bigint)"
-
-    def fm(x):
-        return f"(cast({x} as double) / 1000000.0D)"
-
-    def cnt_l(lbl):
-        return f"size(filter(__p__, v -> v.l = {q(lbl)}))"
-
-    def cnt_rl(rater, lbl):
-        return (
-            f"size(filter(__p__, v -> v.r = {q(rater)}"
-            f" AND v.l = {q(lbl)}))"
-        )
-
-    # T0: smoothed vote-share vector — the classic T0 cell by cell
-    # (count + a) / (n_votes + aL); int vs bigint counts widen to the
-    # same exact double before the division
-    t0_cells = ", ".join(
-        m6(f"({cnt_l(c)} + {aD}) / (size(__p__) + {aLD})")
-        for c in classes
-    )
-    T = pats.selectExpr("__p__", "__w__", f"array({t0_cells}) as __t__")
-
-    for _ in range(iterations):
-        # M: ONE global aggregate — class-prior masses and the confusion
-        # tensor.  joint m(r,j,l) = sum_p w * t[j] * (#votes by r with
-        # label l in p): the frame-based joint's integers, regrouped.
-        aggs = [
-            F.expr(
-                f"sum(__w__ * element_at(__t__, {j + 1}))"
-            ).alias(f"mass_{j}")
-            for j in range(L)
-        ]
-        for ri, rater in enumerate(rater_cols):
-            for j in range(L):
-                for li, lbl in enumerate(classes):
-                    aggs.append(
-                        F.expr(
-                            f"sum(__w__ * element_at(__t__, {j + 1})"
-                            f" * {cnt_rl(rater, lbl)})"
-                        ).alias(f"m_{ri}_{j}_{li}")
-                    )
-        mrow = T.agg(*aggs)
-        # priors and per-rater log-matrices as 1-row projections — the
-        # exact expressions of the frame path (total/row-mass are exact
-        # bigint adds, the same integers the window/agg versions sum)
-        total = " + ".join(f"mass_{j}" for j in range(L))
-        proj = [
-            m6(
-                f"ln({fm(f'mass_{j}')} / {fm(f'({total})')})",
-                "decimal(11,6)",
-            ) + f" as logp_{j}"
-            for j in range(L)
-        ]
-        for ri in range(len(rater_cols)):
-            for j in range(L):
-                rm = " + ".join(f"m_{ri}_{j}_{li}" for li in range(L))
-                for li in range(L):
-                    proj.append(
-                        m6(
-                            f"ln(({fm(f'm_{ri}_{j}_{li}')} + {aD})"
-                            f" / ({fm(f'({rm})')} + {aLD}))",
-                            "decimal(11,6)",
-                        ) + f" as lp_{ri}_{j}_{li}"
-                    )
-        matrices = mrow.selectExpr(*proj)
-
-        # E + softmax: pure per-pattern projection against the broadcast
-        # 1-row matrices.  ln_num[j] = logp[j] + sum over the pattern's
-        # own votes of logpi[r][j][l] — exact bigint adds (the order the
-        # array fold visits them cannot change an integer sum).
-        withm = T.crossJoin(F.broadcast(matrices))
-
-        def ln_num(j):
-            rater_arms = " ".join(
-                f"WHEN {q(rater)} THEN (CASE v.l "
-                + " ".join(
-                    f"WHEN {q(lbl)} THEN lp_{ri}_{j}_{li}"
-                    for li, lbl in enumerate(classes)
-                )
-                + " ELSE cast(0 as bigint) END)"
-                for ri, rater in enumerate(rater_cols)
-            )
-            fold = (
-                "aggregate(__p__, cast(0 as bigint), (acc, v) -> acc + "
-                f"(CASE v.r {rater_arms} ELSE cast(0 as bigint) END))"
-            )
-            return f"({fold} + logp_{j})"
-
-        lnarr = "array(" + ", ".join(ln_num(j) for j in range(L)) + ")"
-        stage = withm.selectExpr(
-            "__p__", "__w__", f"{lnarr} as __ln__"
-        ).selectExpr(
-            "__p__", "__w__", "__ln__", "array_max(__ln__) as __mx__"
-        ).selectExpr(
-            "__p__", "__w__",
-            "transform(__ln__, ln -> cast((cast(round("
-            f"exp({fm('(ln - __mx__)')}), 12) as decimal(20,12))"
-            " * 1000000000000) as bigint)) as __e__",
-        ).selectExpr(
-            "__p__", "__w__", "__e__",
-            "aggregate(__e__, cast(0 as bigint), (acc, e) -> acc + e)"
-            " as __den__",
-        )
-        T = stage.selectExpr(
-            "__p__", "__w__",
-            "transform(__e__, e -> "
-            + m6(
-                "(cast(e as double) / 1.0E12D)"
-                " / (cast(__den__ as double) / 1.0E12D)"
-            )
-            + ") as __t__",
-        )
-        # persist per round: pattern-sized, and the cache substitution
-        # truncates the analyzed plan — without it round t+1's 80-odd
-        # aggregate expressions each embed round t's full softmax tree
-        # and planning time compounds geometrically
-        T = track(T)
-
-    # argmax: classes sorted ascending, array_position returns the FIRST
-    # index attaining the max — exactly the (t desc, j asc) tie-break
-    cls_arr = "array(" + ", ".join(q(c) for c in classes) + ")"
-    res = T.selectExpr(
-        "__p__",
-        f"element_at({cls_arr}, cast(array_position(__t__,"
-        " array_max(__t__)) as int)) as __lbl__",
-        fm("array_max(__t__)") + " as __conf__",
-    )
-    return (
-        pat.join(F.broadcast(res), "__p__")
-        .select(
-            F.col("i").alias(item_col),
-            F.col("__lbl__").alias(label_col),
-            F.col("__conf__").alias("confidence"),
-            F.size("__p__").cast("long").alias("n_votes"),
-        )
-    )
-
-
-def _dawid_skene_patterns(
-    pat: DataFrame,
-    item_col: str,
-    label_col: str,
-    iterations: int,
-    a: float,
-    n_classes: int | None = None,
-    pats: DataFrame | None = None,
-) -> DataFrame:
-    """Pattern-collapsed Dawid-Skene EM core (see ``dawid_skene``
-    docstring); ``pat`` is the per-item pattern map ``(i, __p__)`` with
-    ``__p__`` the sorted array of (r, l) vote structs.
-
-    The EM loop below is the classic loop verbatim with two mechanical
-    substitutions, each exact in the bigint fixed-point representation:
-
-    - the item key ``i`` becomes the vote pattern — legal because every
-      per-item expression (T0's smoothed share, the E-step's sum of the
-      item's own logpi cells, the softmax, the argmax) reads only the
-      item's own votes;
-    - the two corpus-level M-step sums gain an integer weight:
-      ``sum(t)`` over items == ``sum(__w__ * t)`` over patterns, where
-      ``__w__`` is the pattern's item count — bigint * bigint, no
-      rounding, same integer.
-
-    Priors, confusion matrices, log-probs, softmax inputs are therefore
-    bit-identical to the classic path round by round, and so is every
-    output row.
-
-    Physical shape: the distinct-pattern table is coalesced to ONE
-    partition, and SinglePartition satisfies every downstream
-    distribution requirement — so the whole EM (aggregations, windows,
-    merge-hinted joins) runs as one exchange-free task chain; the
-    merge hints exist to keep the planner from inserting per-join
-    broadcast-build jobs for frames that already live in that task.
-    The corpus appears exactly twice: the one aggregation that builds
-    ``pats`` and the final broadcast join of the pattern-sized answer
-    back onto ``pat``.
-    """
-    # coalesce(1): SinglePartition satisfies every downstream
-    # distribution requirement, so EnsureRequirements plans the whole EM
-    # with ZERO exchanges.  NOT persisted — an InMemoryRelation here
-    # would report unknown partitioning under AQE and every downstream
-    # agg/join/window would grow a 1-row exchange (~30 extra jobs);
-    # within one action the __p__ exchange is computed once and reused
-    # (ReusedExchange) across every consumer of this frame.
-    # a caller that already materialized the pattern counts (the wide
-    # path's probe cache) passes them through — the coalesce(1) on top
-    # still yields SinglePartition, so the exchange-free property holds
-    pats = (
-        pat.groupBy("__p__").agg(F.count(F.lit(1)).alias("__w__"))
-        if pats is None else pats
-    ).coalesce(1)
-    # pattern-level vote stream: one row per (pattern, vote) — the
-    # pattern-space analogue of the vote log, |patterns| x raters rows
-    pv = pats.select(
-        F.col("__p__").alias("i"), F.explode("__p__").alias("__v__")
-    ).select(
-        "i", F.col("__v__.r").alias("r"), F.col("__v__.l").alias("l")
-    )
-    classes = pv.select(F.col("l").alias("j")).distinct()
-    if n_classes is None:
-        n_classes = classes.count()  # label-set sized: metadata
-    _check_class_bound(n_classes)
-    aL = a * n_classes
-
-    wts = pats.select(F.col("__p__").alias("i"), "__w__")
-    items = pats.select(
-        F.col("__p__").alias("i"),
-        F.size("__p__").cast("long").alias("n_votes"),
-        "__w__",
-    )
-    counts = pv.groupBy("i", F.col("l").alias("j")).agg(
-        F.count(F.lit(1)).alias("c")
-    )
-    grid = items.crossJoin(F.broadcast(classes))
-    T = (
-        grid.join(counts.hint("merge"), ["i", "j"], "left")
-        .select(
-            "i", "j",
-            _micros(
-                F.round(
-                    (F.coalesce(F.col("c"), F.lit(0)) + F.lit(a))
-                    / (F.col("n_votes") + F.lit(aL)),
-                    6,
-                ),
-                "decimal(7,6)",
-            ).alias("t"),
-            "__w__",
-        )
-    )
-
-    for _ in range(iterations):
-        # M: class priors from exact posterior mass — per-pattern mass
-        # weighted by the pattern's item count (bigint * bigint, exact)
-        prior = (
-            T.groupBy("j").agg(
-                F.sum(F.col("__w__") * F.col("t")).alias("mass")
-            )
-            .withColumn("total", F.sum("mass").over(Window.partitionBy()))
-            .select(
-                "j",
-                _micros(
-                    F.round(
-                        F.log(
-                            _from_micros(F.col("mass"))
-                            / _from_micros(F.col("total"))
-                        ),
-                        6,
-                    ),
-                    "decimal(11,6)",
-                ).alias("logp"),
-            )
-        )
-        # M: per-rater confusion matrices — each pattern vote stands for
-        # __w__ identical item votes
-        joint = (
-            pv.join(T.hint("merge"), "i")
-            .groupBy("r", "j", "l")
-            .agg(F.sum(F.col("__w__") * F.col("t")).alias("m"))
-        )
-        row_mass = joint.groupBy("r", "j").agg(F.sum("m").alias("rm"))
-        logpi = (
-            joint.join(row_mass.hint("merge"), ["r", "j"])
-            .select(
-                "r", "j", "l",
-                _micros(
-                    F.round(
-                        F.log(
-                            (_from_micros(F.col("m")) + F.lit(a))
-                            / (_from_micros(F.col("rm")) + F.lit(aL))
-                        ),
-                        6,
-                    ),
-                    "decimal(11,6)",
-                ).alias("logpi"),
-            )
-        )
-        # E: per-(pattern, class) log-posterior — the pattern's OWN votes
-        # only, unweighted (identical to the per-item sum)
-        lognum = (
-            pv.join(logpi.hint("merge"), ["r", "l"])
-            .groupBy("i", "j")
-            .agg(F.sum("logpi").alias("s"))
-            .join(prior.hint("merge"), "j")
-            .select("i", "j", (F.col("s") + F.col("logp")).alias("ln_num"))
-        )
-        per_i = Window.partitionBy("i")
-        T = (
-            lognum.withColumn("mx", F.max("ln_num").over(per_i))
-            .select(
-                "i", "j",
-                (
-                    F.round(
-                        F.exp(_from_micros(F.col("ln_num") - F.col("mx"))),
-                        12,
-                    ).cast("decimal(20,12)")
-                    * F.lit(1_000_000_000_000)
-                ).cast("bigint").alias("e"),
-            )
-            .withColumn("den", F.sum("e").over(per_i))
-            .select(
-                "i", "j",
-                _micros(
-                    F.round(
-                        (F.col("e").cast("double") / F.lit(1e12))
-                        / (F.col("den").cast("double") / F.lit(1e12)),
-                        6,
-                    ),
-                    "decimal(7,6)",
-                ).alias("t"),
-            )
-            .join(wts.hint("merge"), "i")  # reattach the pattern weight
-        )
-
-    w = Window.partitionBy("i").orderBy(F.col("t").desc(), F.col("j").asc())
-    res = (
-        T.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select(F.col("i").alias("__p__"), "j", "t")
-    )
-    # per-item answer: broadcast the pattern-sized result table back onto
-    # the item->pattern map (the second and last corpus-scale pass)
-    return (
-        pat.join(F.broadcast(res), "__p__")
-        .select(
-            F.col("i").alias(item_col),
-            F.col("j").alias(label_col),
-            _from_micros(F.col("t")).alias("confidence"),
             F.size("__p__").cast("long").alias("n_votes"),
         )
     )

@@ -8510,17 +8510,13 @@ def dawid_skene_labels_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNROLLS both EM rounds into pure SQL (the BPE-training pattern):
     every cross-row sum is an exact DECIMAL, each ln/exp is rounded and
     checkpointed, so DuckDB reproduces the posterior bit-for-bit.
-    Scale: one corpus scan builds the per-item vote-pattern projection;
-    the EM runs entirely over the distinct-pattern table (bounded by
-    (classes+1)^raters) as a single exchange-free task, and the answer
-    broadcast-joins back — the confusion matrices and priors are
-    raters x classes^2 metadata."""
+    Scale: the votes arrive wide (one column per annotator), so the
+    per-item vote pattern is a projection; with 3 raters and 5 labels
+    there are at most 6^3 = 216 distinct patterns at any scale, so
+    ``dawid_skene_wide`` runs the EM driver-side over them and the
+    answer broadcast-joins back."""
     from .operators.labels import dawid_skene_wide
 
-    # the votes are already WIDE (one column per annotator): the vote
-    # pattern is a pure projection, so the corpus is never melted or
-    # shuffled — the EM itself runs over the ~6^3-pattern table
-    # (dawid_skene_wide / pattern_collapse; bit-identical output)
     return dawid_skene_wide(
         _annotated_events(spark, sf_dir),
         item_col="event_id", rater_cols=["a1", "a2", "a3"],

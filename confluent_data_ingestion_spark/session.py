@@ -9,10 +9,13 @@ to broadcast joins.
 
 from __future__ import annotations
 
+import logging
 import os
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+
+logger = logging.getLogger(__name__)
 
 
 def get_spark(app_name: str = "confluent-data-ingestion-spark") -> SparkSession:
@@ -61,7 +64,11 @@ def delta_available(spark: SparkSession) -> bool:
         return False
     try:
         exts = spark.conf.get("spark.sql.extensions", "") or ""
-    except Exception:
+    except Exception as exc:
+        logger.warning(
+            "delta_available: could not read spark.sql.extensions (%r); "
+            "treating Delta as unavailable", exc,
+        )
         return False
     return "DeltaSparkSessionExtension" in exts
 
@@ -108,7 +115,11 @@ def ensure_min_parallelism(df, min_partitions: int | None = None):
         size = int(
             str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         )
-    except Exception:
+    except Exception as exc:
+        logger.warning(
+            "ensure_min_parallelism: no size estimate (%r); treating the "
+            "input as small and repartitioning to %d", exc, target,
+        )
         size = 0  # no estimate -> treat as small, keep the cores busy
     if size >= target * max_pb:
         return df

@@ -55,18 +55,40 @@ def _texts(spark, sf_dir, n=60):
     return sub, [r.text for r in sub.collect()]
 
 
-def test_merges_match_python_reference(spark, sf_dir):
-    from confluent_data_ingestion_spark.operators.tokenize import (
-        bpe_train_merges,
-    )
+def test_merges_match_python_reference(spark, sf_dir, monkeypatch):
+    """With the driver bound at the vocabulary size V the merge loop
+    runs driver-side; at V - 1 the distributed loop runs.  Both must
+    equal the pure-Python reference — on the documents sample and on a
+    corpus whose pairs run out before ``n_merges``."""
+    from confluent_data_ingestion_spark.operators import tokenize
 
+    driver_calls = []
+    real_driver = tokenize._bpe_train_driver
+
+    def spy(*args, **kwargs):
+        driver_calls.append(1)
+        return real_driver(*args, **kwargs)
+
+    monkeypatch.setattr(tokenize, "_bpe_train_driver", spy)
     sub, texts = _texts(spark, sf_dir)
-    want, _ = _py_bpe(texts, 8)
-    got = [
-        (r.left, r.right, r.merged, r.pair_count)
-        for r in bpe_train_merges(sub, n_merges=8).orderBy("rank").collect()
-    ]
-    assert got == want
+    short = ["ab ab", "abc", "  c "]
+    short_df = spark.createDataFrame(
+        [(i, t) for i, t in enumerate(short)], "doc_id long, text string"
+    )
+    for df, corpus, n_merges in ((sub, texts, 8), (short_df, short, 5)):
+        want, _ = _py_bpe(corpus, n_merges)
+        vocab = len({w for t in corpus for w in t.split(" ") if w})
+        for bound, driver in ((vocab, True), (vocab - 1, False)):
+            monkeypatch.setattr(tokenize, "_DRIVER_BPE_MAX_VOCAB", bound)
+            driver_calls.clear()
+            got = [
+                (r.left, r.right, r.merged, r.pair_count)
+                for r in tokenize.bpe_train_merges(df, n_merges=n_merges)
+                .orderBy("rank").collect()
+            ]
+            assert bool(driver_calls) == driver, bound
+            assert got == want, bound
+    assert len(_py_bpe(short, 5)[0]) == 2  # the short corpus runs out
 
 
 def test_segment_matches_python_reference(spark, sf_dir):

@@ -254,38 +254,80 @@ def test_dawid_skene_wide_driver_em_matches_long_form(spark):
     assert got == want  # confidences are 6-dp-quantized doubles: exact ==
 
 
-def test_dawid_skene_vectorized_quotes_backslash_labels(spark):
-    """q() must escape backslashes: a label like 'x\\' used to parse as
-    a Spark SQL escape sequence and silently corrupt the vote counts in
-    the vectorized SQL-literal path."""
+def test_dawid_skene_wide_matches_long_form_across_the_pattern_bound(
+    spark, monkeypatch
+):
+    """With the driver bound at the input's distinct-pattern count P the
+    wide path runs the driver EM; at P - 1 it explodes the pattern map
+    and runs the long-form frame EM.  Both must equal ``dawid_skene``
+    over the melted votes, column for column and bit for bit.  The
+    labels carry a backslash and a quote, some votes are NULL, one item
+    has no vote at all, and one item is an exact posterior tie that the
+    lexical tie-break resolves."""
     from confluent_data_ingestion_spark.caching import release_caches
-    from confluent_data_ingestion_spark.operators.labels import (
-        _dawid_skene_vectorized,
+    from confluent_data_ingestion_spark.operators import labels
+
+    X, Y = "x\\", "y'z"
+    swap = {X: Y, Y: X, None: None}
+    base = []
+    for i in range(12):
+        base.append((
+            i,
+            X if i % 3 else Y,
+            (Y if i % 2 else X) if i % 4 else None,   # b skips some items
+            Y if i % 5 == 0 else X,
+        ))
+    # add each row's image under (swap the two labels, swap raters a and
+    # b): the votes are then symmetric, so the item (a=X, b=Y) scores
+    # both classes with the same integers and the tie-break picks X
+    wide_rows = base + [
+        (i + 1000, swap[b], swap[a], swap[c]) for i, a, b, c in base
+    ]
+    wide_rows += [(100, X, Y, None), (200, None, None, None)]
+    df = spark.createDataFrame(
+        wide_rows, "item long, a string, b string, c string"
     )
-    import pyspark.sql.functions as F
+    melted = [
+        (item, rater, lbl)
+        for item, *votes in wide_rows
+        for rater, lbl in zip("abc", votes)
+        if lbl is not None
+    ]
+    n_patterns = len({
+        tuple(sorted((r, lbl) for r, lbl in zip("abc", votes)
+                     if lbl is not None))
+        for _item, *votes in wide_rows
+        if any(v is not None for v in votes)
+    })
 
-    rows = [(i, "x\\", "x\\", "y'z" if i % 4 == 0 else "x\\")
-            for i in range(12)]
-    df = spark.createDataFrame(rows, "item long, a string, b string, c string")
-    pat = df.select(
-        F.col("item").alias("i"),
-        F.sort_array(
-            F.filter(
-                F.array(*[
-                    F.struct(F.lit(c).alias("r"), F.col(c).alias("l"))
-                    for c in ["a", "b", "c"]
-                ]),
-                lambda v: v["l"].isNotNull(),
-            )
-        ).alias("__p__"),
-    ).filter(F.size("__p__") > 0)
-    from confluent_data_ingestion_spark.caching import track
+    def rows(frame):
+        return frame.dtypes, {
+            r["item"]: (r["label"], r["confidence"], r["n_votes"])
+            for r in frame.collect()
+        }
 
-    pats = track(pat.groupBy("__p__").agg(F.count(F.lit(1)).alias("__w__")))
-    out = _dawid_skene_vectorized(
-        pat, pats, "item", "label", 1, 0.01, ["a", "b", "c"],
-        sorted({"x\\", "y'z"}),
-    ).collect()
+    want = rows(labels.dawid_skene(
+        spark.createDataFrame(
+            melted, "item long, rater string, label string"
+        ),
+        iterations=2,
+    ))
+    assert want[1][100] == (X, 0.5, 2)
+    assert 200 not in want[1]
+
+    driver_calls = []
+    real_driver = labels._dawid_skene_driver
+
+    def spy(*args, **kwargs):
+        driver_calls.append(1)
+        return real_driver(*args, **kwargs)
+
+    monkeypatch.setattr(labels, "_dawid_skene_driver", spy)
+    for bound, n_driver_calls in ((n_patterns, 1), (n_patterns - 1, 1)):
+        monkeypatch.setattr(labels, "_DRIVER_EM_MAX_PATTERNS", bound)
+        got = rows(labels.dawid_skene_wide(
+            df, item_col="item", rater_cols=["a", "b", "c"], iterations=2
+        ))
+        assert len(driver_calls) == n_driver_calls, bound
+        assert got == want, bound  # 6-dp-quantized doubles: exact ==
     release_caches()
-    assert len(out) == 12
-    assert all(r["label"] == "x\\" for r in out)

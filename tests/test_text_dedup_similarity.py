@@ -1517,3 +1517,16 @@ def test_connected_components_collect_bound_matches_distributed(spark):
         for r in connected_components(df, collect_bound=3).collect()
     }
     assert over == want
+    # exactly at the bound (E edges) the driver path runs; one below,
+    # the distributed rounds
+    n_edges = len(edges)
+    for bound, driver in ((n_edges, True), (n_edges - 1, False)):
+        stats: dict = {}
+        got = {
+            (r["doc_id"], r["cluster_id"])
+            for r in connected_components(
+                df, collect_bound=bound, stats=stats
+            ).collect()
+        }
+        assert got == want, bound
+        assert (stats["rounds"] == 0) == driver, bound

@@ -73,6 +73,12 @@ def main() -> int:
     from pyspark.sql import SparkSession
     from confluent_data_ingestion_spark.queries import QUERIES, ORACLES
 
+    # a misspelled row name must fail, not pass as "0/0"
+    unknown = sorted(set(only or ()) - set(QUERIES))
+    if unknown:
+        print(f"strict gate: unknown rows {unknown}")
+        return 1
+
     spark = (
         SparkSession.builder.master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '16')}]")
         .config("spark.sql.shuffle.partitions", "16")
