@@ -2,7 +2,7 @@
 # .claude/skills/verify/SKILL.md for the full driver contract).
 
 .PHONY: test correctness correctness-sf01 bench audit plan-fixture smoke verify \
-	perfbench-ab strict-gate
+	perfbench-ab strict-gate loc
 
 test:
 	python -m pytest tests/ -x -q
@@ -52,5 +52,11 @@ strict-gate:
 		python tools/strict_gate.py $(TESTDATA)/$$sf \
 			$(if $(ONLY),--only $(ONLY)) || exit 1; \
 	done
+
+# non-test .py line count of the package and tools/ (the LOC figure the
+# CHANGES.md entries quote)
+loc:
+	@find confluent_data_ingestion_spark tools -name '*.py' \
+		! -name 'test_*' ! -path '*/tests/*' -print0 | xargs -0 cat | wc -l
 
 verify: correctness smoke bench

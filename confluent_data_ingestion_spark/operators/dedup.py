@@ -798,7 +798,6 @@ def repeated_substring_spans(
     span_chars: int = 60,
     anchor_chars: int = 8,
     min_docs: int = 2,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Cross-document repeated-substring detection — the substring-level
     dedup family (suffix-array dedup à la "Deduplicating Training Data
@@ -819,18 +818,10 @@ def repeated_substring_spans(
     Cost shape: the anchor scan evaluates an md5 per character position —
     a per-row projection (zero shuffle); the only shuffles are
     (span_hash, id) pairs into the distinct-doc count and the hash join
-    back.  Two interchangeable kernels produce bit-identical anchors:
-
-     - ``kernel="expr"``: pure Catalyst expressions (the oracle path —
-       any SQL engine reproduces it).
-     - ``kernel="pandas"``: Arrow-batched ``mapInPandas`` single-pass
-       scan — one Python loop per document instead of a Catalyst
-       ``transform()`` that materializes a struct array per position.
-       Same md5 anchor rule, so outputs are differentially testable;
-       same zero-shuffle partition-preserving shape.
+    back.  The anchor scan is pure Catalyst expressions, so any SQL engine
+    (the oracle included) reproduces it.
     """
-    grams = _anchor_grams(df, id_col, text_col, span_chars, anchor_chars,
-                          kernel=kernel)
+    grams = _anchor_grams(df, id_col, text_col, span_chars, anchor_chars)
     hits = (
         grams.groupBy("span_hash")
         .agg(F.countDistinct(id_col).cast("bigint").alias("n_docs"))
@@ -847,20 +838,13 @@ def _anchor_grams(
     text_col: str,
     span_chars: int,
     anchor_chars: int,
-    kernel: str = "expr",
 ) -> DataFrame:
     """(id, pos, span_hash) rows at content-defined anchor positions.
 
     A position p (1-based) is an anchor when md5 of the ``anchor_chars``-
     char prefix at p starts with hex '0'; its span hash is md5 of the
-    ``span_chars``-char substring at p.  Both kernels implement exactly
-    this rule, so their outputs are row-identical.
+    ``span_chars``-char substring at p.
     """
-    if kernel == "pandas":
-        return _anchor_grams_pandas(df, id_col, text_col, span_chars,
-                                    anchor_chars)
-    if kernel != "expr":
-        raise ValueError(f"kernel must be 'expr' or 'pandas', got {kernel!r}")
     t, g, a = text_col, span_chars, anchor_chars
     spans = (
         f"CASE WHEN char_length({t}) >= {g} THEN "
@@ -881,66 +865,6 @@ def _anchor_grams(
     )
 
 
-def _anchor_grams_pandas(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    span_chars: int,
-    anchor_chars: int,
-) -> DataFrame:
-    """Arrow-batched anchor scan: one tight Python loop per document.
-
-    Chars are sliced on the STRING (Spark ``substr`` is character-based,
-    so non-ASCII text hashes identically) and each slice md5'd via
-    hashlib — bit-identical to the expression kernel.  Partition-
-    preserving ``mapInPandas``: no shuffle, the batch iterator streams
-    Arrow record batches so a partition never materializes whole.
-    """
-    import hashlib
-
-    import pandas as pd
-
-    g, a = span_chars, anchor_chars
-    id_type = df.schema[id_col].dataType.simpleString()
-    out_schema = f"{id_col} {id_type}, pos int, span_hash string"
-    src = ensure_min_parallelism(df).select(id_col, text_col)
-
-    def scan(batches):
-        md5 = hashlib.md5
-        # Memoize the per-window anchor decision: a repeated 8-char window
-        # (boilerplate, shared phrases) is hashed ONCE per partition where
-        # the expression kernel re-hashes every occurrence — the knob the
-        # JVM path has no equivalent for.  Capped so a high-entropy
-        # partition can't grow the dict without bound.
-        anchor_cache: dict[str, bool] = {}
-        for pdf in batches:
-            ids: list = []
-            poss: list = []
-            hashes: list = []
-            for i, t in zip(pdf[id_col], pdf[text_col]):
-                if t is None or len(t) < g:
-                    continue
-                if len(anchor_cache) > 1_000_000:
-                    anchor_cache.clear()
-                for p in range(len(t) - g + 1):
-                    w = t[p:p + a]
-                    hit = anchor_cache.get(w)
-                    if hit is None:
-                        hit = md5(w.encode("utf-8")).hexdigest()[0] == "0"
-                        anchor_cache[w] = hit
-                    if hit:
-                        ids.append(i)
-                        poss.append(p + 1)
-                        hashes.append(
-                            md5(t[p:p + g].encode("utf-8")).hexdigest()
-                        )
-            yield pd.DataFrame(
-                {id_col: ids, "pos": poss, "span_hash": hashes}
-            )
-
-    return src.mapInPandas(scan, schema=out_schema)
-
-
 def cross_set_span_contamination(
     train: DataFrame,
     eval_df: DataFrame,
@@ -948,7 +872,6 @@ def cross_set_span_contamination(
     text_col: str = "text",
     span_chars: int = 60,
     anchor_chars: int = 8,
-    kernel: str = "expr",
 ) -> DataFrame:
     """Character-level benchmark decontamination: training documents that
     share a >= ``span_chars``-char verbatim span with ANY eval document —
@@ -962,11 +885,9 @@ def cross_set_span_contamination(
 
     Output: (train ``id_col``, n_shared_spans, first_pos).
     """
-    tg = _anchor_grams(train, id_col, text_col, span_chars, anchor_chars,
-                       kernel=kernel)
+    tg = _anchor_grams(train, id_col, text_col, span_chars, anchor_chars)
     eg = (
-        _anchor_grams(eval_df, id_col, text_col, span_chars, anchor_chars,
-                      kernel=kernel)
+        _anchor_grams(eval_df, id_col, text_col, span_chars, anchor_chars)
         .select("span_hash")
         .distinct()
     )

@@ -230,7 +230,7 @@ def scd2_apply_batch(
     touched keys re-version over (their handful of version starts + the
     new events).  Cost is proportional to the BATCH, not the table; on a
     Delta/Iceberg-backed table the same shape becomes a MERGE on the
-    touched keys (see ``streaming/upsert.py``'s backend probe).
+    touched keys.
     """
     touched = batch.select(*keys).distinct()
     hist_touched = history.join(touched, keys, "left_semi")

@@ -170,25 +170,19 @@ class PipelineCompiler:
             cols.append(F.expr(expr).alias(r.target_column))
         return cols
 
-    def _select_targets(self, df: DataFrame, rows: list[MappingRow],
-                        qualified: bool) -> DataFrame:
-        return df.select(*self._target_exprs(rows))
-
     def _build_xref(self, table: str, rows: list[MappingRow]) -> DataFrame:
-        src = self._relation(rows[0].source_table)
         left_alias = rows[0].source_alias or "s"
+        src = self._relation(rows[0].source_table).alias(left_alias)
         j = self._first_join(rows)
         if j is not None:
             src = lookup_join(
-                self._alias_or_self(src, left_alias),
+                src,
                 self._relation(j.join_table),
                 j.join_condition,
                 join_type=j.join_type,
                 left_alias=left_alias,
                 right_alias=j.join_alias or "j",
             )
-        else:
-            src = src.alias(left_alias)
         pred = combine_predicates([r.filter_predicate or "" for r in rows])
         if pred:
             src = src.filter(F.expr(translate_expr(pred, safe_cast=False)))
@@ -213,9 +207,6 @@ class PipelineCompiler:
             deduped = deduped.drop(*carry)
         return deduped
 
-    def _alias_or_self(self, df: DataFrame, alias: str) -> DataFrame:
-        return df.alias(alias)
-
     def _build_fgac(self, table: str, rows: list[MappingRow]) -> DataFrame:
         left_alias = rows[0].source_alias or "s"
         src = self._relation(rows[0].source_table).alias(left_alias)
@@ -232,7 +223,7 @@ class PipelineCompiler:
         pred = combine_predicates([r.filter_predicate or "" for r in rows])
         if pred:
             src = src.filter(F.expr(translate_expr(pred, safe_cast=False)))
-        return self._select_targets(src, rows, qualified=True)
+        return src.select(*self._target_exprs(rows))
 
     def _build_quarantine(self, table: str, rows: list[MappingRow]) -> DataFrame:
         """FilterPredicate '<alias>.<col> IS NULL' + LEFT join convention
@@ -247,7 +238,7 @@ class PipelineCompiler:
             F.expr(translate_expr(j.join_condition, safe_cast=False)),
             "left_anti",
         )
-        return self._select_targets(anti, rows, qualified=False)
+        return anti.select(*self._target_exprs(rows))
 
     # -- public -------------------------------------------------------------
 

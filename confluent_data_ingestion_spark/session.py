@@ -20,7 +20,7 @@ logger = logging.getLogger(__name__)
 
 def get_spark(app_name: str = "confluent-data-ingestion-spark") -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", "32")
@@ -31,46 +31,8 @@ def get_spark(app_name: str = "confluent-data-ingestion-spark") -> SparkSession:
         # Arrow for the pandas-UDF extension operators.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .getOrCreate()
     )
-    # capability probe: when the delta-spark package is importable, wire the
-    # Delta SQL extension + catalog so UpsertSnapshot(backend="delta") can
-    # MERGE; absent (as in minimal installs) the parquet-log backend is the
-    # fallback and nothing here changes
-    try:
-        import delta  # noqa: F401
-
-        builder = (
-            builder.config(
-                "spark.sql.extensions",
-                "io.delta.sql.DeltaSparkSessionExtension",
-            ).config(
-                "spark.sql.catalog.spark_catalog",
-                "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-            )
-        )
-    except ImportError:
-        pass
-    return builder.getOrCreate()
-
-
-def delta_available(spark: SparkSession) -> bool:
-    """True when the session can run Delta Lake MERGE: the delta-spark
-    package imports AND the session was built with the Delta SQL
-    extension (a session created before the package was installed, or by
-    another factory, may import delta yet lack the extension)."""
-    try:
-        from delta.tables import DeltaTable  # noqa: F401
-    except ImportError:
-        return False
-    try:
-        exts = spark.conf.get("spark.sql.extensions", "") or ""
-    except Exception as exc:
-        logger.warning(
-            "delta_available: could not read spark.sql.extensions (%r); "
-            "treating Delta as unavailable", exc,
-        )
-        return False
-    return "DeltaSparkSessionExtension" in exts
 
 
 def _parse_bytes(v: str) -> int:

@@ -75,8 +75,8 @@ class StatementSetRunner:
         self.out_dir = out_dir.rstrip("/")
         self.checkpoint_dir = checkpoint_dir or f"{self.out_dir}/_checkpoints"
         # one store instance per target for the runner's lifetime, so
-        # per-instance state (the latched v1->v2 log-format check) holds
-        # across microbatches instead of re-running every batch
+        # per-instance state (the cached log schema) holds across
+        # microbatches instead of re-merging footers every batch
         self._stores: dict[tuple[str, str], UpsertSnapshot | None] = {}
         # per-stage physical plans of the most recent microbatch — the
         # foreachBatch side of the plan audit (streaming/audit.py);
@@ -202,9 +202,9 @@ class StatementSetRunner:
                     # quiescence the last batch touching a key computed its
                     # downstream rows from the true global latest, so keyed
                     # downstream upserts converge to the batch-mode result.
-                    latest = store.latest_of_batch(
-                        spark, txn, fallback_keys=df
-                    ).select(*[r.target_column for r in rows])
+                    latest = store.latest_of_batch(spark, txn).select(
+                        *[r.target_column for r in rows]
+                    )
                     checkpoints.append(latest.localCheckpoint(eager=True))
                     compiler.compiled[table] = checkpoints[-1]
                 else:  # FGAC / QUARANTINE

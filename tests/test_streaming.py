@@ -71,6 +71,36 @@ def test_upsert_delete_modes(spark, tmp_path):
     assert snap == {2: "b"}  # delete retracts the key
 
 
+def test_upsert_delta_contract_matches_parquet_log_on_stub(spark, tmp_path):
+    """The upsert contract a MERGE-style backend had to reproduce, pinned on
+    the parquet-log store as explicit snapshots for both delete modes:
+    ranking on the sequence columns across batches, plus tombstone
+    semantics for deletes."""
+    # across batches: an out-of-order update, a delete of a key that was
+    # never inserted (3), and a delete as key 2's newest event later on
+    batches = [
+        [Row(k=1, seq=1, v="a", deleted="false"),
+         Row(k=2, seq=1, v="b", deleted="false")],
+        [Row(k=1, seq=3, v="a3", deleted="false"),
+         Row(k=1, seq=2, v="a2", deleted="false"),
+         Row(k=3, seq=1, v="c", deleted="true")],
+        [Row(k=2, seq=2, v="gone", deleted="true")],
+    ]
+    expected = {
+        "exclude": {(1, 3, "a3"), (2, 1, "b")},
+        "tombstone": {(1, 3, "a3")},
+    }
+    for mode, want in expected.items():
+        store = UpsertSnapshot(
+            str(tmp_path / f"seq-{mode}"), ["k"], ["seq"],
+            delete_flag_field="deleted", delete_mode=mode,
+        )
+        for i, rows in enumerate(batches):
+            store.upsert(spark.createDataFrame(rows), batch_id=i)
+        got = {(r["k"], r["seq"], r["v"]) for r in store.snapshot(spark).collect()}
+        assert got == want, f"mode={mode}"
+
+
 def test_compact_preserves_snapshot(spark, tmp_path):
     store = _mk_store(tmp_path)
     for s in range(4):
@@ -887,161 +917,6 @@ def test_stateful_funnel_drops_null_event_times(spark, tmp_path):
     assert got == {(1, 1): ("view", "2026-01-01 00:00:03")}
 
 
-# ---------------------------------------------------------------------------
-# Delta backend for UpsertSnapshot
-# ---------------------------------------------------------------------------
-def _delta_ok(spark):
-    from confluent_data_ingestion_spark.session import delta_available
-
-    return delta_available(spark)
-
-
-def test_upsert_backend_validation_and_auto_fallback(spark, tmp_path):
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="backend"):
-        _mk_store(tmp_path, backend="iceberg")
-
-    store = _mk_store(tmp_path, backend="auto")
-    store.upsert(spark.createDataFrame([Row(k=1, seq=1, v="a")]))
-    if not _delta_ok(spark):
-        # sandbox has no delta-spark: auto must resolve to the parquet log
-        assert store.backend == "parquet-log"
-        assert store.snapshot(spark).collect()[0]["v"] == "a"
-
-    if not _delta_ok(spark):
-        hard = UpsertSnapshot(str(tmp_path / "d"), ["k"], ["seq"],
-                              backend="delta")
-        with _pytest.raises(RuntimeError, match="delta-spark"):
-            hard.upsert(spark.createDataFrame([Row(k=1, seq=1, v="a")]))
-
-
-def test_upsert_delta_merge_replay_idempotent(spark, tmp_path):
-    """Delta-backend contract: latest-wins MERGE, strictly-newer condition,
-    idempotent double replay (skipped where delta-spark is unavailable)."""
-    import pytest as _pytest
-
-    if not _delta_ok(spark):
-        _pytest.skip("delta-spark not installed in this environment")
-    store = _mk_store(tmp_path, backend="delta")
-    b1 = spark.createDataFrame([Row(k=1, seq=5, v="new"), Row(k=2, seq=1, v="b")])
-    b2 = spark.createDataFrame([Row(k=1, seq=3, v="stale")])
-    assert store.upsert(b1, batch_id=1)
-    assert store.upsert(b2, batch_id=2)      # late arrival: older seq loses
-    assert not store.upsert(b1, batch_id=1)  # replay: marker skips the MERGE
-    assert store.upsert(b1.selectExpr("k", "seq", "v"), batch_id=3)  # re-MERGE
-    snap = {r["k"]: (r["seq"], r["v"]) for r in store.snapshot(spark).collect()}
-    # double-applied newest batch is a no-op: strictly-newer keeps target
-    assert snap == {1: (5, "new"), 2: (1, "b")}
-
-
-def test_upsert_delta_contract_replay_idempotent_on_stub(spark, tmp_path):
-    """Exactly-once contract for the delta backend WITHOUT delta-spark:
-    the real ``_upsert_delta`` body (MERGE clause construction,
-    strictly-newer update condition, marker replay skip) executes against
-    the DataFrame-backed MERGE emulator.  Double replay is idempotent both
-    via the marker (same batch_id) and via the strictly-newer MERGE
-    condition (same data, new batch_id)."""
-    from fake_delta import FakeDeltaStore
-
-    store = FakeDeltaStore(str(tmp_path / "fd"), ["k"], ["seq"],
-                           backend="delta")
-    b1 = spark.createDataFrame([Row(k=1, seq=5, v="new"), Row(k=2, seq=1, v="b")])
-    b2 = spark.createDataFrame([Row(k=1, seq=3, v="stale")])
-    assert store.upsert(b1, batch_id=1)
-    assert store.upsert(b2, batch_id=2)      # late arrival: older seq loses
-    assert not store.upsert(b1, batch_id=1)  # replay: marker skips the MERGE
-    assert store.upsert(b1, batch_id=3)      # re-MERGE: strictly-newer no-ops
-    snap = {r["k"]: (r["seq"], r["v"]) for r in store.snapshot(spark).collect()}
-    assert snap == {1: (5, "new"), 2: (1, "b")}
-
-
-def test_upsert_delta_contract_matches_parquet_log_on_stub(spark, tmp_path):
-    """Differential on the emulator: the same batch sequence through the
-    parquet-log backend and the stubbed delta backend yields the same
-    snapshot in both delete modes — the MERGE clauses _upsert_delta emits
-    reproduce the log's ranking + tombstone semantics."""
-    from fake_delta import FakeDeltaStore
-
-    batches = [
-        [Row(k=1, seq=1, v="a", deleted="false"),
-         Row(k=2, seq=1, v="b", deleted="false")],
-        [Row(k=1, seq=3, v="a3", deleted="false"),
-         Row(k=1, seq=2, v="a2", deleted="false"),
-         Row(k=3, seq=1, v="c", deleted="true")],
-        [Row(k=2, seq=2, v="gone", deleted="true")],
-    ]
-    for mode in ("exclude", "tombstone"):
-        log_store = UpsertSnapshot(
-            str(tmp_path / f"stub-{mode}-log"), ["k"], ["seq"],
-            delete_flag_field="deleted", delete_mode=mode,
-        )
-        fake_store = FakeDeltaStore(
-            str(tmp_path / f"stub-{mode}-delta"), ["k"], ["seq"],
-            delete_flag_field="deleted", delete_mode=mode, backend="delta",
-        )
-        for i, rows in enumerate(batches):
-            df = spark.createDataFrame(rows)
-            log_store.upsert(df, batch_id=i)
-            fake_store.upsert(df, batch_id=i)
-        got_log = {(r["k"], r["seq"], r["v"])
-                   for r in log_store.snapshot(spark).collect()}
-        got_fake = {(r["k"], r["seq"], r["v"])
-                    for r in fake_store.snapshot(spark).collect()}
-        assert got_fake == got_log, f"mode={mode}: {got_fake} != {got_log}"
-
-
-def test_upsert_delta_auto_selection_probes_availability(spark, tmp_path, monkeypatch):
-    """backend='auto' resolves via session.delta_available: patched True it
-    picks delta (and the stubbed surface executes); unpatched in this
-    sandbox it falls back to the parquet log (covered by
-    test_upsert_backend_validation_and_auto_fallback)."""
-    from fake_delta import FakeDeltaTable
-
-    from confluent_data_ingestion_spark import session as sess
-
-    monkeypatch.setattr(sess, "delta_available", lambda s: True)
-    store = UpsertSnapshot(str(tmp_path / "auto-d"), ["k"], ["seq"],
-                           backend="auto")
-    monkeypatch.setattr(store, "_delta_table_api", lambda: FakeDeltaTable)
-    monkeypatch.setattr(store, "_delta_io_format", lambda: "parquet")
-    store.upsert(spark.createDataFrame([Row(k=1, seq=1, v="a")]), batch_id=0)
-    assert store.backend == "delta"
-    assert store.snapshot(spark).collect()[0]["v"] == "a"
-
-
-def test_upsert_delta_matches_parquet_log_backend(spark, tmp_path):
-    """Differential: the same batch sequence through both backends yields
-    the same snapshot (skipped where delta-spark is unavailable)."""
-    import pytest as _pytest
-
-    if not _delta_ok(spark):
-        _pytest.skip("delta-spark not installed in this environment")
-    batches = [
-        [Row(k=1, seq=1, v="a", deleted="false"),
-         Row(k=2, seq=1, v="b", deleted="false")],
-        [Row(k=1, seq=3, v="a3", deleted="false"),
-         Row(k=1, seq=2, v="a2", deleted="false"),
-         Row(k=3, seq=1, v="c", deleted="true")],
-        [Row(k=2, seq=2, v="gone", deleted="true")],
-    ]
-    for mode in ("exclude", "tombstone"):
-        stores = {
-            b: UpsertSnapshot(str(tmp_path / f"{mode}-{b}"), ["k"], ["seq"],
-                              delete_flag_field="deleted", delete_mode=mode,
-                              backend=b)
-            for b in ("parquet-log", "delta")
-        }
-        for i, rows in enumerate(batches):
-            for s in stores.values():
-                s.upsert(spark.createDataFrame(rows), batch_id=i)
-        got = {
-            b: {(r["k"], r["seq"], r["v"]) for r in s.snapshot(spark).collect()}
-            for b, s in stores.items()
-        }
-        assert got["delta"] == got["parquet-log"], f"mode={mode}: {got}"
-
-
 def test_statement_set_mid_batch_failure_exactly_once(spark, tmp_path):
     """Kill the pipeline BETWEEN sink writes inside one microbatch: the
     XREF upsert commits, then the quarantine append dies before writing.
@@ -1162,53 +1037,6 @@ def test_snapshot_as_of_below_compaction_horizon_raises(spark, tmp_path):
     }
 
 
-def test_legacy_v1_log_migrates_on_first_access(spark, tmp_path):
-    """A store written by the pre-__seq format (bare parquet files at the
-    log root) must keep working after the upgrade: the first v2 access
-    folds the root files into __seq=0 instead of producing Spark's
-    'Conflicting directory structures' error, snapshots are unchanged,
-    and legacy markers still dedup replays but refuse seq lookups."""
-    import os
-
-    path = tmp_path / "legacy"
-    store = UpsertSnapshot(str(path), ["k"], ["seq"])
-    # simulate the v1 on-disk layout: appends at the log root, marker "1"
-    spark.createDataFrame(
-        [Row(k=1, seq=1, v="a"), Row(k=2, seq=1, v="b")]
-    ).write.mode("append").parquet(store.log_dir)
-    spark.createDataFrame([Row(k=1, seq=2, v="a2")]).write.mode(
-        "append"
-    ).parquet(store.log_dir)
-    with open(store._marker("legacy-batch"), "w") as f:
-        f.write("1")
-    assert any(n.endswith(".parquet") for n in os.listdir(store.log_dir))
-
-    # v2 append on top of the legacy layout: must migrate, not corrupt
-    assert store.upsert(
-        spark.createDataFrame([Row(k=3, seq=1, v="c")]), batch_id="b-new"
-    )
-    snap = {r["k"]: r["v"] for r in store.snapshot(spark).collect()}
-    assert snap == {1: "a2", 2: "b", 3: "c"}
-    # no bare files remain; everything lives under __seq=N partitions
-    assert not any(
-        n.endswith(".parquet") for n in os.listdir(store.log_dir)
-    )
-    assert store.log(spark).count() == 4
-    # legacy marker still dedups its batch id but has no sequence
-    assert store.committed("legacy-batch")
-    with pytest.raises(RuntimeError, match="no append sequence"):
-        store.seq_of_batch("legacy-batch")
-    # the new batch's marker resolves and time travel works from it
-    seq = store.seq_of_batch("b-new")
-    as_of = {r["k"]: r["v"] for r in store.snapshot_as_of(spark, seq).collect()}
-    assert as_of == snap
-    # pre-migration history folded into one sequence: as-of it sees v1 rows
-    first = {
-        r["k"]: r["v"] for r in store.snapshot_as_of(spark, seq - 1).collect()
-    }
-    assert first == {1: "a2", 2: "b"}
-
-
 def test_upsert_log_additive_schema_evolution(spark, tmp_path):
     """Columns added by later appends must survive into the snapshot
     (rows predating the column read NULL) — without mergeSchema Spark
@@ -1293,23 +1121,9 @@ def test_latest_of_batch_reads_the_keys_one_append_wrote(spark, tmp_path):
     assert rows(store.latest_of_batch(spark, "b1")) == [(1, "a"), (2, "b")]
     assert rows(store.latest_of_batch(spark, "b0")) == [
         (1, "a"), (2, "b"), (3, "c")]
-    # a marker without a sequence (pre-__seq format) needs the batch's keys
-    with open(store._marker("legacy"), "w") as f:
-        f.write("legacy")
-    with pytest.raises(RuntimeError, match="no append sequence"):
-        store.latest_of_batch(spark, "legacy")
-    keys = spark.createDataFrame([Row(k=3, other="x")])
-    assert rows(store.latest_of_batch(spark, "legacy", fallback_keys=keys)) == [
-        (3, "c")]
-
-
-def test_v1_migration_is_read_triggered_too(spark, tmp_path):
-    """log()/snapshot() on a legacy store must not raise even when no new
-    batch has been written yet."""
-    path = tmp_path / "legacy_ro"
-    store = UpsertSnapshot(str(path), ["k"], ["seq"])
-    spark.createDataFrame(
-        [Row(k=1, seq=1, v="a"), Row(k=1, seq=2, v="b")]
-    ).write.mode("append").parquet(store.log_dir)
-    snap = store.snapshot(spark).collect()
-    assert len(snap) == 1 and snap[0]["v"] == "b"
+    # a marker that does not parse is bad input read from disk: it raises,
+    # naming the batch
+    with open(store._marker("torn"), "w") as f:
+        f.write("")
+    with pytest.raises(RuntimeError, match="'torn'"):
+        store.latest_of_batch(spark, "torn")

@@ -550,10 +550,12 @@ def test_repeated_spans_detects_shared_text_at_different_offsets(spark):
 
 
 def test_anchor_kernels_differential(spark):
-    """The Arrow-batched pandas anchor kernel must emit row-identical
-    (id, pos, span_hash) to the Catalyst expression kernel — same md5
-    anchor rule, char-based slicing (non-ASCII text included)."""
-    import pytest as _pytest
+    """The Catalyst anchor scan emits exactly the (id, pos, span_hash)
+    rows of a pure-Python reference of the anchor rule: md5 over
+    character slices (non-ASCII text included), short and NULL
+    documents anchor nothing."""
+    import hashlib
+    from collections import defaultdict
 
     from confluent_data_ingestion_spark.operators.dedup import (
         _anchor_grams,
@@ -562,33 +564,41 @@ def test_anchor_kernels_differential(spark):
 
     shared = ("the quick brown fox jumps over the lazy dog while the band "
               "plays on through the night")
-    df = spark.createDataFrame(
-        [
-            (1, "aaa bbb ccc " + shared + " café résumé naïve tail here"),
-            (2, shared + " xxx yyy zzz"),
-            (3, "short"),
-            (4, None),
-        ],
-        "doc_id long, text string",
+    docs = [
+        (1, "aaa bbb ccc " + shared + " café résumé naïve tail here"),
+        (2, shared + " xxx yyy zzz"),
+        (3, "short"),
+        (4, None),
+    ]
+    df = spark.createDataFrame(docs, "doc_id long, text string")
+
+    def md5(s):
+        return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+    want = sorted(
+        (i, p + 1, md5(t[p:p + 60]))
+        for i, t in docs
+        if t is not None
+        for p in range(len(t) - 60 + 1)
+        if md5(t[p:p + 8])[0] == "0"
     )
-    expr_rows = sorted(
+    got = sorted(
         map(tuple, _anchor_grams(df, "doc_id", "text", 60, 8).collect())
     )
-    pd_rows = sorted(
-        map(tuple, _anchor_grams(df, "doc_id", "text", 60, 8,
-                                 kernel="pandas").collect())
+    assert got == want and want
+
+    # and the full operator keeps the grams whose span recurs in >= 2 docs
+    span_docs = defaultdict(set)
+    for i, _, h in want:
+        span_docs[h].add(i)
+    want_spans = sorted(
+        (i, pos, h, len(span_docs[h]))
+        for i, pos, h in want
+        if len(span_docs[h]) >= 2
     )
-    assert expr_rows == pd_rows and expr_rows
-
-    # and the full operator agrees end-to-end on both kernels
-    a = repeated_substring_spans(df, span_chars=60, anchor_chars=8,
-                                 min_docs=2, kernel="expr")
-    b = repeated_substring_spans(df, span_chars=60, anchor_chars=8,
-                                 min_docs=2, kernel="pandas")
-    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
-
-    with _pytest.raises(ValueError, match="kernel"):
-        repeated_substring_spans(df, kernel="nope").collect()
+    out = repeated_substring_spans(df, span_chars=60, anchor_chars=8,
+                                   min_docs=2)
+    assert sorted(map(tuple, out.collect())) == want_spans and want_spans
 
 
 def test_concat_chunk_plan_covers_docs_and_fills_chunks(spark):
